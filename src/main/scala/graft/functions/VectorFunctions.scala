@@ -37,18 +37,19 @@ object VectorFunctions {
     aggregate(zip_with(toDouble(a), toDouble(b), (x, y) => (x - y) * (x - y)),
               lit(0.0), (acc, x) => acc + x)
 
-  /** Cosine similarity: dot / (sqrt(|a|²) · sqrt(|b|²)) — the exact
-    * operation order of DuckDB's list_cosine_similarity. Dispatches to the
-    * native codegen expression `graft.functions.expressions.CosineSimilarity`
-    * (registered by GraftExtensions): one fused compiled loop instead of
-    * three interpreted higher-order folds, same bit-exact result
-    * (cross-checked against `cosineHof` in the spec suite). */
+  /** Cosine similarity: dot / (sqrt(|a|²) · sqrt(|b|²)) clamped to
+    * [-1, 1] — the exact operation order and clamp of DuckDB's
+    * list_cosine_similarity. Dispatches to the native codegen expression
+    * `graft.functions.expressions.CosineSimilarity` (registered by
+    * GraftExtensions): one fused compiled loop instead of three interpreted
+    * higher-order folds, bit-exact wherever the unclamped fold stays within
+    * [-1, 1] (cross-checked against `cosineHof` in the spec suite). */
   def cosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
   /** The original higher-order-function formulation, kept as the reference
     * implementation the native expression is differentially tested against
-    * (and a fallback for sessions without GraftExtensions). */
+    * (and a fallback for sessions without GraftExtensions). Unclamped. */
   def cosineHof(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(norm2(a)) * sqrt(norm2(b)))
 

@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * array. Numeric contract is unchanged: elementwise float→double widening
   * and sequential left-to-right accumulation, bit-identical to the HOF fold
   * and to DuckDB's `list_cosine_similarity` on `DOUBLE[]` (the driver's
-  * oracle hashes depend on this).
+  * oracle hashes depend on this). Like DuckDB, the result is clamped to
+  * [-1, 1]: rounding can carry cos(v, v) to 1.0000000000000002. A NaN
+  * (zero-norm input) passes through unchanged.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -43,7 +45,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
     while (j < x.numElements()) { val v = x.getFloat(j).toDouble; nx += v * v; j += 1 }
     j = n
     while (j < y.numElements()) { val v = y.getFloat(j).toDouble; ny += v * v; j += 1 }
-    dot / (math.sqrt(nx) * math.sqrt(ny))
+    math.max(-1.0, math.min(dot / (math.sqrt(nx) * math.sqrt(ny)), 1.0))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -69,7 +71,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
          |for (int $i = $n; $i < $b.numElements(); $i++) {
          |  final double $yv = (double) $b.getFloat($i); $ny += $yv * $yv;
          |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny));
+         |${ev.value} = java.lang.Math.max(-1.0, java.lang.Math.min(
+         |  $dot / (java.lang.Math.sqrt($nx) * java.lang.Math.sqrt($ny)), 1.0));
        """.stripMargin
     })
 

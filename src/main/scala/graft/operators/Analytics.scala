@@ -340,9 +340,11 @@ object Analytics {
   private[graft] def kllLevel(spark: SparkSession, hist0: DataFrame,
                               k: Int): DataFrame = {
     val js = spark.range(KllMaxLevel + 1).select(col("id").as("j"))
-    // EAGER truncation of the ≤49·|scopes|-row state (r16, guide §1.2):
-    // this plan references the histogram four times (scope list + range
-    // join, each under both cnts consumers), and when hist0 is the
+    // LAZY truncation of the ≤49·|scopes|-row state (r16, guide §1.2):
+    // localCheckpoint(false) runs no job here; the first action over this
+    // plan materializes the histogram once and every later reference
+    // reads the blocks. The plan references it four times (scope list +
+    // range join, each under both cnts consumers), and when hist0 is the
     // batch-side aggregate each reference re-ran the FULL stratification
     // scan it summarizes — the sketch state is metadata-sized by
     // contract, so materializing it once is exactly what "persist the

@@ -587,8 +587,9 @@ object Warehouse {
     * local-mode stand-in for a cluster's NVMe scratch (optimization guide
     * §6). FINGERPRINT-GATED staged roots (media, text formats) stay on
     * java.io.tmpdir: they persist across runs by design and the vacuum
-    * tooling audits them there. Override: SPARK_GRAFT_SCRATCH. */
-  def fastScratchRoot: String = sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
+    * tooling audits them there. Override: SPARK_GRAFT_SCRATCH. Resolved
+    * once per JVM. */
+  lazy val fastScratchRoot: String = sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
     shmIfRoomy("graft_scratch")
       .getOrElse(System.getProperty("java.io.tmpdir")))
 

@@ -152,7 +152,7 @@ object EventStreams {
     val dir = if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(srcPath)))
       java.nio.file.Paths.get(srcPath)
     else streamDirs.computeIfAbsent(srcPath, { key =>
-      val d = scratchTempDir(s"graft_stream_$name")
+      val d = scratchTempDir(spark, s"graft_stream_$name")
       val link = d.resolve(s"$name.parquet")
       java.nio.file.Files.createSymbolicLink(link, java.nio.file.Paths.get(key))
       // deleteOnExit runs LIFO: register the dir first so the link (deleted
@@ -214,33 +214,40 @@ object EventStreams {
 
   /** Root for EPHEMERAL per-run checkpoints (offsets/commits/state of the
     * bounded replays below — per-invocation scratch, deleted on
-    * completion, never reused across runs): checkpoint commits are
-    * fsync-bound small-file I/O, so they belong on the fastest NODE-LOCAL
-    * scratch available — the same reasoning as pointing a cluster's
-    * `spark.local.dir` at local NVMe (optimization guide §6). Tunable via
-    * `graft.stream.checkpointRoot`; the local default prefers /dev/shm
-    * (the image's RAM-backed scratch) and falls back to java.io.tmpdir.
-    * RESTARTABLE checkpoints (the crash-replay fixtures that pass an
-    * explicit `checkpointDir`) are untouched — durability is their point,
-    * so they stay on the durable store the caller chose. */
-  private[graft] def defaultCheckpointRoot: String =
-    // headroom-checked (r16): tmpfs only above a free-space floor, else
-    // tmpdir — see [[graft.sources.Warehouse.shmIfRoomy]] for the cluster
-    // guidance (point graft.stream.checkpointRoot at node-local NVMe)
+    * completion, never reused across runs) and for the replays' staged
+    * micro-batch files. Each checkpoint commit creates and renames a few
+    * small files; what those cost is one `chmod`/`readlink` process per
+    * file in Hadoop's local filesystem, removed by
+    * [[graft.sources.LocalFs]], not the bytes or their fsync. The root
+    * is `graft.stream.checkpointRoot` when set, else
+    * [[defaultCheckpointRoot]]. RESTARTABLE checkpoints (the crash-replay
+    * fixtures that pass an explicit `checkpointDir`) are untouched —
+    * durability is their point, so they stay on the durable store the
+    * caller chose. */
+  private[graft] def checkpointRoot(spark: SparkSession): java.nio.file.Path = {
+    val root = java.nio.file.Paths.get(
+      spark.conf.get("graft.stream.checkpointRoot", defaultCheckpointRoot))
+    java.nio.file.Files.createDirectories(root)
+    root
+  }
+
+  /** The local default of [[checkpointRoot]], resolved once per JVM:
+    * /dev/shm (the image's RAM-backed scratch) when it has headroom, else
+    * java.io.tmpdir — see [[graft.sources.Warehouse.shmIfRoomy]] for the
+    * cluster guidance (point graft.stream.checkpointRoot at node-local
+    * NVMe). */
+  private[graft] lazy val defaultCheckpointRoot: String =
     graft.sources.Warehouse.shmIfRoomy("graft_ckpt")
       .getOrElse(sys.props("java.io.tmpdir") + "/graft_ckpt")
 
-  /** Fresh ephemeral directory on the fast scratch root (same root as the
-    * checkpoints — see [[defaultCheckpointRoot]]) — the staging area for
-    * the bounded-replay fixtures' micro-batch drop files, which sit on the
-    * TIMED path of every multi-batch streaming query (written, mtime'd,
-    * then re-read by FileStreamSource): same small-file-latency argument
-    * as the checkpoints themselves. deleteOnExit, like the /tmp temp dirs
-    * it replaces. */
-  private[graft] def scratchTempDir(prefix: String): java.nio.file.Path = {
-    val root = java.nio.file.Paths.get(defaultCheckpointRoot)
-    java.nio.file.Files.createDirectories(root)
-    val d = java.nio.file.Files.createTempDirectory(root, prefix)
+  /** Fresh ephemeral directory under [[checkpointRoot]] — the staging area
+    * for the bounded-replay fixtures' micro-batch drop files, which sit on
+    * the TIMED path of every multi-batch streaming query (written,
+    * mtime'd, then re-read by FileStreamSource). deleteOnExit, like the
+    * /tmp temp dirs it replaces. */
+  private[graft] def scratchTempDir(spark: SparkSession,
+                                    prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(checkpointRoot(spark), prefix)
     d.toFile.deleteOnExit()
     d
   }
@@ -248,15 +255,21 @@ object EventStreams {
   /** Replay a bounded source through a streaming query to completion and
     * return the final memory-sink table.
     *
-    * Stateful streaming cost scales with SHUFFLE PARTITIONS, not data: a
-    * stream-stream join commits 4 state stores per partition per
-    * micro-batch, so the batch-oriented partition count (sized for scan
-    * parallelism) multiplies pure fixed overhead — measured 6.2s for a
-    * near-empty micro-batch at 32 partitions. Streaming queries therefore
-    * plan with their own partition count (`graft.stream.shufflePartitions`,
-    * default 8, never raising the session value) — at production rates you
-    * size this to sustained throughput, because it also fixes the state
-    * parallelism for the checkpoint's lifetime. */
+    * A micro-batch's fixed cost is its checkpoint files: the offset and
+    * commit log entries, plus one delta file per state store per shuffle
+    * partition (a stream-stream join has 4 stores), each with its `.crc`
+    * and checksum files. So the file count, not the data, scales with
+    * SHUFFLE PARTITIONS, and the batch-oriented partition count (sized for
+    * scan parallelism) multiplies it — measured 6.2s for a near-empty
+    * micro-batch at 32 partitions, when Hadoop's local filesystem still
+    * forked a `chmod` or `readlink` process per file (see
+    * [[graft.sources.LocalFs]], which removed those processes). Streaming
+    * queries therefore plan with their own partition count
+    * (`graft.stream.shufflePartitions`, default 8, never raising the
+    * session value; with 4 cores the session value 4 is the smaller, so
+    * every replay runs at 4) — at production rates you size this to
+    * sustained throughput, because it also fixes the state parallelism for
+    * the checkpoint's lifetime. */
   private def runToCompletion(spark: SparkSession, streamed: DataFrame,
                               prefix: String, mode: OutputMode,
                               widthOverride: Option[Int] = None): DataFrame = {
@@ -274,10 +287,7 @@ object EventStreams {
     // same-name checkpoint would make the replay skip already-committed
     // source files and materialize a PARTIAL table) ephemeral checkpoint
     // on fast local scratch, deleted on completion.
-    val ckptRoot = java.nio.file.Paths.get(
-      spark.conf.get("graft.stream.checkpointRoot", defaultCheckpointRoot))
-    java.nio.file.Files.createDirectories(ckptRoot)
-    val ckptDir = java.nio.file.Files.createTempDirectory(ckptRoot, name)
+    val ckptDir = java.nio.file.Files.createTempDirectory(checkpointRoot(spark), name)
     try {
       spark.conf.set("spark.sql.shuffle.partitions", streamParts)
       val q = streamed.writeStream
@@ -368,7 +378,7 @@ object EventStreams {
   def streamLateAuditQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.sources.Tables.events(spark, sfDir)
       .select(col("ts"), col("event_type"), col("event_id"))
-    val dir = scratchTempDir("graft_late_audit")
+    val dir = scratchTempDir(spark, "graft_late_audit")
     dir.toFile.deleteOnExit()
     stageStreamFile(ev.filter(col("event_id") % 8 =!= 0 && col("event_id") % 8 =!= 4),
                     dir, "b0", 1000000L)
@@ -469,11 +479,13 @@ object EventStreams {
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
     // width 4, not the stream default 8: a stream-stream join commits FOUR
-    // state stores per partition per micro-batch, so partition width is its
-    // dominant fixed cost — measured 3.0s at 8 vs 2.2s at 4, while the
-    // other stateful queries (one store each) are flat-to-worse at 4
-    // (SURVEY §6.1 measured-and-rejected). At production rates width is
-    // sized to sustained throughput instead; this is the bounded-replay
+    // state stores per partition per micro-batch, so partition width sets
+    // its checkpoint file count — measured 3.0s at 8 vs 2.2s at 4 while
+    // each file still forked a chmod/readlink process (see runToCompletion),
+    // and the other stateful queries (one store each) were flat-to-worse at
+    // 4 (SURVEY §6.1 measured-and-rejected). With a session width of 4 or
+    // less the override does not bind. At production rates width is sized
+    // to sustained throughput instead; this is the bounded-replay
     // verification setting.
     val result = runToCompletion(spark, joined, "stream_join", OutputMode.Append(),
       widthOverride = Some(4))
@@ -629,7 +641,7 @@ object EventStreams {
       .select(col("doc_id"), col("fp"),
               timestamp_add("MINUTE", col("m").cast("int"), epoch).as("ts"),
               expr("m div 300").as("seg"))
-    val dir = scratchTempDir("graft_dedup_bounded")
+    val dir = scratchTempDir(spark, "graft_dedup_bounded")
     dir.toFile.deleteOnExit()
     // all segment drop files staged in ONE write job (r15 — guide §1.2:
     // the per-segment loop paid one collect + one job per segment, ~8
@@ -2039,7 +2051,7 @@ object EventStreams {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(col("lang"), col("source"), col("doc_id"))
-    val dir = scratchTempDir("graft_noised_stream")
+    val dir = scratchTempDir(spark, "graft_noised_stream")
     dir.toFile.deleteOnExit()
     for (e <- 0 until NoisedReleaseEpochs)
       stageStreamFile(docs.filter(col("doc_id") % NoisedReleaseEpochs === e),
@@ -2101,7 +2113,7 @@ object EventStreams {
       .unionByName(docs.filter(col("doc_id") % 11 === 2)
         .select((col("doc_id") + lit(mxk)).as("doc_id"),
                 md5(col("text")).as("sig_b")))
-    val dir = scratchTempDir("graft_snapdiff_stream")
+    val dir = scratchTempDir(spark, "graft_snapdiff_stream")
     dir.toFile.deleteOnExit()
     stageStreamFile(b.filter(col("doc_id") % 2 === 0), dir, "b0", 1000000L)
     stageStreamFile(b.filter(col("doc_id") % 2 === 1), dir, "b1", 2000000L)
@@ -2153,7 +2165,7 @@ object EventStreams {
     val b = ev.agg(coalesce(min("us"), lit(0L)).as("mn"),
                    coalesce(max("us"), lit(0L)).as("mx")).head()
     val split = (b.getLong(0) + b.getLong(1)) / 2
-    val dir = scratchTempDir("graft_scd2_stream")
+    val dir = scratchTempDir(spark, "graft_scd2_stream")
     dir.toFile.deleteOnExit()
     stageStreamFile(ev.filter(col("us") <= split), dir, "b0", 1000000L)
     stageStreamFile(ev.filter(col("us") > split), dir, "b1", 2000000L)
@@ -2232,7 +2244,7 @@ object EventStreams {
     val chg1 = base.filter(col("k") % 13 =!= 5 && col("k") % 7 === 3 && col("k") % 2 === 0)
       .select(col("k"), lit("U").as("op"), col("st"),
               (col("c") + 200).as("c"), lit(3L).as("seq"))
-    val dir = scratchTempDir("graft_cdc_stream")
+    val dir = scratchTempDir(spark, "graft_cdc_stream")
     dir.toFile.deleteOnExit()
     stageStreamFile(chg0, dir, "b0", 1000000L)
     stageStreamFile(chg1, dir, "b1", 2000000L)
@@ -2308,7 +2320,7 @@ object EventStreams {
     val delta = docs.filter(col("doc_id") % 10 === 0).select("doc_id", "text")
     // two single-file parquet drops with ordered mtimes: FileStreamSource
     // processes oldest-first, maxFilesPerTrigger=1 cuts one batch per file
-    val dir = scratchTempDir("graft_ingest_stream")
+    val dir = scratchTempDir(spark, "graft_ingest_stream")
     dir.toFile.deleteOnExit()
     stageStreamFile(delta.filter(expr("(doc_id div 10) % 2 = 0")), dir, "b0", 1000000L)
     stageStreamFile(delta.filter(expr("(doc_id div 10) % 2 = 1")), dir, "b1", 2000000L)
@@ -2456,12 +2468,10 @@ object EventStreams {
     // Without one, the checkpoint is per-run EPHEMERAL scratch, so it goes
     // on the fast local root (fresh dir — see runToCompletion) instead of
     // Spark's java.io.tmpdir temp default.
-    val ephemeralCkpt = if (checkpointDir.isEmpty) {
-      val root = java.nio.file.Paths.get(
-        spark.conf.get("graft.stream.checkpointRoot", defaultCheckpointRoot))
-      java.nio.file.Files.createDirectories(root)
-      Some(java.nio.file.Files.createTempDirectory(root, "ingest"))
-    } else None
+    val ephemeralCkpt =
+      if (checkpointDir.isEmpty)
+        Some(java.nio.file.Files.createTempDirectory(checkpointRoot(spark), "ingest"))
+      else None
     checkpointDir.orElse(ephemeralCkpt.map(_.toString))
       .foreach(d => writer.option("checkpointLocation", d))
     val writerQ = writer

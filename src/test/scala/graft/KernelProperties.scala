@@ -4,8 +4,13 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 import graft.functions.TextFunctions
-import graft.functions.expressions.ChunkKernel
+import graft.functions.expressions.{ChunkKernel, CosineSimilarity}
 import graft.operators.{Dedup, TextAnalysis}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** ScalaCheck properties over the compiled kernels — the reference's
@@ -298,5 +303,24 @@ object KernelProperties extends Properties("graft.kernels") {
       val jdk = java.text.Normalizer.normalize(t, java.text.Normalizer.Form.NFC)
       got == jdk &&
         NfcKernel.nfc(UTF8String.fromString(got)).toString == got
+    }
+
+  private val embedding: Gen[Array[Float]] =
+    Gen.choose(1, 128).flatMap(n => Gen.listOfN(n, Gen.choose(-10f, 10f)))
+      .map(_.toArray).suchThat(_.exists(_ != 0f))
+
+  // DuckDB's list_cosine_similarity clamps to [-1, 1]; an unclamped fold
+  // gives cos(v, v) = 1.0000000000000002 on many vectors
+  property("graft_cosine: cos(v, v) <= 1 and cos(v, -v) >= -1, interpreted and compiled") =
+    forAll(embedding) { v =>
+      val arg = (i: Int) => BoundReference(i, ArrayType(FloatType, containsNull = false), false)
+      val e = CosineSimilarity(arg(0), arg(1))
+      val compiled = GenerateUnsafeProjection.generate(Seq(e))
+      Seq(v, v.map(-_)).forall { w =>
+        val row = InternalRow(UnsafeArrayData.fromPrimitiveArray(v),
+          UnsafeArrayData.fromPrimitiveArray(w))
+        val got = e.eval(row).asInstanceOf[Double]
+        got >= -1.0 && got <= 1.0 && compiled(row).getDouble(0) == got
+      }
     }
 }

@@ -1315,4 +1315,14 @@ class StreamingSpec extends SparkSpecBase {
     assert(row.getString(4) === Relational.joinSkewRouteOf(n, maxc),
       s"stream verdict diverged from the batch audit: $row")
   }
+
+  test("stream_late_audit stages its micro-batch files under graft.stream.checkpointRoot") {
+    val root = java.nio.file.Files.createTempDirectory("graft_ckpt_root")
+    spark.conf.set("graft.stream.checkpointRoot", root.toString)
+    try SparkEntry.queries("stream_late_audit")(spark, sf0001).collect()
+    finally spark.conf.unset("graft.stream.checkpointRoot")
+    val staged = root.toFile.listFiles().filter(_.getName.startsWith("graft_late_audit"))
+    assert(staged.length === 1, root.toFile.list().toSeq)
+    assert(staged.head.list().toSet === Set("b0.parquet", "b1.parquet", "b2.parquet"))
+  }
 }
