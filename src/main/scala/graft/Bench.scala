@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A warmup pass at sf0.001 runs every query first so
@@ -8,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The one local-session recipe every measurement tool shares (Bench,
-    * QueryTimer, ScaleProbe): identical configs are what make their
+    * Probe, ScaleProbe): identical configs are what make their
     * numbers comparable — a flag added in one tool but not another would
     * make cross-tool deltas measurement artifacts. */
   def localSession(cpus: String): SparkSession = {
@@ -141,76 +142,12 @@ object Bench {
     java.lang.management.ManagementFactory.getMemoryMXBean
       .getHeapMemoryUsage.getUsed >> 20
 
-  /** Per-query MEMORY accounting — the measured numbers behind the 100 TB
-    * state-bound arguments (bounded dedup state, append-mode windows),
-    * which would otherwise stay prose: peak per-task execution memory and
-    * shuffle spill from `TaskMetrics`, peak streaming state-store bytes
-    * from `StreamingQueryProgress.stateOperators`. Reset between queries so
-    * each number is attributable to one query. Peaks are per-TASK (the
-    * executor-memory sizing unit — a task whose hash map exceeds its slice
-    * of executor memory is what spills/OOMs at scale), not summed across
-    * the 32 concurrent locals. */
-  private class MemoryProbe(spark: SparkSession) {
-    @volatile private var peakTaskBytes = 0L
-    @volatile private var spilledBytes = 0L
-    @volatile private var peakStateBytes = 0L
-    private val taskListener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) synchronized {
-          peakTaskBytes = math.max(peakTaskBytes, m.peakExecutionMemory)
-          spilledBytes += m.memoryBytesSpilled
-        }
-      }
-    }
-    private val streamListener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit = {
-        val s = e.progress.stateOperators.map(_.memoryUsedBytes).sum
-        synchronized { peakStateBytes = math.max(peakStateBytes, s) }
-      }
-    }
-    spark.sparkContext.addSparkListener(taskListener)
-    spark.streams.addListener(streamListener)
-    // LiveListenerBus.waitUntilEmpty is private[spark] — public in bytecode,
-    // so reflection reaches it without shading a package. Falls back to a
-    // no-op if the accessor shape ever changes: the probe then under-counts
-    // trailing task-end events instead of crashing the bench.
-    private val busFlush: () => Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethods.find(m =>
-          m.getName == "waitUntilEmpty" && m.getParameterCount == 0) match {
-          case Some(m) => () => { try m.invoke(bus) catch { case _: Throwable => () }; () }
-          case None => () => ()
-        }
-      } catch { case _: Throwable => () => () }
-    def reset(): Unit = {
-      busFlush() // don't let the PREVIOUS query's trailing events land after the zero
-      peakTaskBytes = 0L; spilledBytes = 0L; peakStateBytes = 0L
-    }
-    /** (peak task exec bytes, shuffle-spill bytes, peak state-store bytes) —
-      * listener events arrive async; drain the bus first so the numbers
-      * cover every task of the query just run. */
-    def snapshot(): (Long, Long, Long) = {
-      busFlush()
-      (peakTaskBytes, spilledBytes, peakStateBytes)
-    }
-  }
+  /** Where the warm-up pass reads; Probe warms on the same inputs. */
+  private[graft] val warmDir = "/root/testdata/sf0.001"
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Diagnosis knobs (both observable in stderr telemetry):
-    //  ORDER=reversed runs the sorted key list backwards — if a "slow" query
-    //  is only slow because of what ran before it, reversing the order moves
-    //  the slowness, proving position-dependence.
-    //  ISOLATE=0 disables the per-query state release (default on).
-    val reversed = sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reversed")
-    val isolate = !sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("0")
     // Pre-seal /tmp hygiene — the r12 lesson turned into code: dead staged
     // versions and abandoned ×10-probe corpora inflated binaryFile-heavy
     // media queries 1.5–2× (5 phantom flags in the first r12 close run)
@@ -252,12 +189,14 @@ object Bench {
       if (dropped.nonEmpty)
         System.err.println(s"[bench] orphaned probe tables dropped: ${dropped.size}")
     }
-    val warmDir = "/root/testdata/sf0.001"
+    // NonFatal only: an OOM or a linkage error during warm-up must stop the
+    // run, not read as "warm-up done" and leave the timed passes on a
+    // broken JVM
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+        try fn(spark, warmDir).count() catch { case NonFatal(_) => () }
       }
-    if (isolate) isolateQueryState(spark)
+    isolateQueryState(spark)
     val calibStart1 = calibrate(1)
     val calibStart16 = calibrate(16)
     val calibStartIo = calibrateIo()
@@ -279,9 +218,8 @@ object Bench {
     // window taxing BOTH back-to-back samples of whichever query it landed
     // on. Pass-separated samples are ~40s apart, so one interference window
     // can inflate at most one of them and the min stays clean.
-    val ordered0 = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered = if (reversed) ordered0.reverse else ordered0
-    val probe = new MemoryProbe(spark)
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    val trace = new QueryTrace(spark)
     // per-query peak memory, max'd over passes (a peak is a capacity
     // requirement — the larger observation is the binding one)
     val peakExec = scala.collection.mutable.Map[String, Long]().withDefaultValue(0L)
@@ -297,22 +235,22 @@ object Bench {
       ordered.filter { case (name, _) => only.forall(_.contains(name)) }
              .map { case (name, fn) =>
         val gc0 = gcMillis
-        probe.reset()
+        trace.reset()
         val rb0 = graft.sources.Warehouse.artifactRebuildCount
         val t0 = System.nanoTime()
         val err = try { fn(spark, sfDir).count(); None }
                   catch { case e: Throwable => Some(e.getClass.getSimpleName) }
         val t = (System.nanoTime() - t0) / 1e9
-        val (pe, sp, ps) = probe.snapshot()
+        val c = trace.snapshot()
         val rb = graft.sources.Warehouse.artifactRebuildCount - rb0
-        peakExec(name) = math.max(peakExec(name), pe)
-        spilled(name) = math.max(spilled(name), sp)
-        peakState(name) = math.max(peakState(name), ps)
+        peakExec(name) = math.max(peakExec(name), c.peakTaskBytes)
+        spilled(name) = math.max(spilled(name), c.spilledBytes)
+        peakState(name) = math.max(peakState(name), c.peakStateBytes)
         rebuilds((name, pass)) = rb
         // per-query telemetry BEFORE isolation, so the cost a query leaves
         // behind (heap growth, GC tax it caused) is attributed to it
-        System.err.println(f"[bench:p$pass] $name%-28s t=$t%7.3fs gc=+${gcMillis - gc0}%4dms heap=${usedHeapMb}%5dMB exec=${pe >> 20}%4dMB state=${ps >> 10}%6dKB rebuilds=$rb")
-        if (isolate) isolateQueryState(spark)
+        System.err.println(f"[bench:p$pass] $name%-28s t=$t%7.3fs gc=+${gcMillis - gc0}%4dms heap=${usedHeapMb}%5dMB exec=${c.peakTaskBytes >> 20}%4dMB state=${c.peakStateBytes >> 10}%6dKB rebuilds=$rb")
+        isolateQueryState(spark)
         name -> (err, t)
       }.toMap
     val pass1 = runPass(1)

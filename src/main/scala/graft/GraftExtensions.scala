@@ -8,7 +8,7 @@ import graft.functions.expressions.{BandHashes, BloomAgg, BloomMightContain, Chu
 
 /** Engine extension point, registered via
   * `spark.sql.extensions=graft.GraftExtensions` (every graft entry point —
-  * Verify, Bench, Explore, the test base — sets it). Injects the native
+  * Verify, Bench, Probe, the test base — sets it). Injects the native
   * codegen expressions as SQL-callable functions, so both the DataFrame API
   * (`functions.call_function`) and `spark.sql(...)` reach them:
   *

@@ -2447,16 +2447,6 @@ object EventStreams {
     overlayPrefix.foreach(ov => IncrementalDedup.requireNotMidAppend(spark, ov))
     def readPrefixes: Seq[String] = prefix +: overlayPrefix.filter(ov =>
       IncrementalDedup.tableNames(ov).forall(spark.catalog.tableExists)).toSeq
-    // per-step stderr timing, off unless SPARK_GRAFT_INGEST_PROFILE=1 —
-    // the observability hook for "where do the batch's seconds go"
-    val profile = sys.env.get("SPARK_GRAFT_INGEST_PROFILE").contains("1")
-    def timed[T](step: String)(f: => T): T =
-      if (!profile) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[ingest] $step%-18s ${(System.nanoTime() - t0) / 1e9}%6.3fs")
-        r
-      }
     val writer = docs.writeStream
       .trigger(Trigger.AvailableNow())
     // checkpointDir makes the stream RESTARTABLE: a crash between the
@@ -2496,11 +2486,11 @@ object EventStreams {
         // Spark runs concurrently within one job, and a lazy frame raced
         // by concurrent first-uses would recompute the ledger anti-join —
         // a corpus-store scan — once per branch.
-        val fresh = timed("ledger-filter")(batch.join(
+        val fresh = batch.join(
           pfxs.map(pfx => spark.table(s"${pfx}_sizes").select(col("doc_id")))
             .reduce(_ unionByName _),
           Seq("doc_id"), "left_anti")
-          .localCheckpoint(true))
+          .localCheckpoint(true)
         // index pairs (batch vs each store) ∪ intra-batch pairs (batch vs
         // itself, doc_a > doc_b so doc_a is the dropped side in both).
         // LAZY truncation (r16, guide §1.2): pairs still cuts the plan (it
@@ -2508,11 +2498,11 @@ object EventStreams {
         // into the pairs write — the first action to touch it, on this
         // thread, with a single reference in that plan — instead of being
         // its own scheduling barrier; the later reads hit the cache.
-        val pairs = timed("verify-pairs")(pfxs
+        val pairs = pfxs
           .map(pfx => IncrementalDedup.deltaAgainst(spark, fresh, pfx, p, threshold))
           .reduce(_ unionByName _)
           .unionByName(IncrementalDedup.selfPairs(fresh, p, threshold))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
         // IDEMPOTENT append: a replayed batch's documents fail the ledger
         // filter and never reach the index, but their pairs would be
         // re-verified and re-written — anti-join against the stored pair
@@ -2524,14 +2514,13 @@ object EventStreams {
             pairs.join(spark.table(pairsTable).select("doc_a", "doc_b"),
               Seq("doc_a", "doc_b"), "left_anti")
           else pairs
-        timed("pairs-write")(
-          newPairs.write.mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(pairsTable))
+        newPairs.write.mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(pairsTable)
         // appendOrCreate truncates this anti-join once (cacheInput) so the
         // five concurrent index-table writes read materialized rows
         val clean = fresh.join(
           pairs.select(col("doc_a").as("doc_id")).distinct(),
           Seq("doc_id"), "left_anti")
-        timed("index-append")(IncrementalDedup.appendOrCreate(clean, writeTo, p))
+        IncrementalDedup.appendOrCreate(clean, writeTo, p)
         // foreachBatch executes under a CLONED SparkSession: the appends
         // above refresh the clone's relation cache only, so the calling
         // session — whose `spark.table` handles serve the next batch's
