@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage._
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, processed batch-at-a-time with
@@ -903,13 +904,11 @@ object Media {
     * passage) still diverges in total byte distribution and fails the L1
     * verify. */
   private[graft] def encodedDupFromFeatures(rawFeats: DataFrame): DataFrame = {
-    // materialize the feature pass ONCE (RoundCheckpointer, the house
-    // lineage-truncation tool): three consumers read this frame (postings
-    // + both verify sides), and without truncation each re-runs the
+    // materialize the feature pass ONCE: three consumers read this frame
+    // (postings + both verify sides), and without the cut each re-runs the
     // binaryFile scan AND the per-byte fingerprint kernel — measured 3×
     // the dominant cost for a frame of |assets| × (fps + 32 longs) rows
-    val feats = new graft.operators.Dedup.RoundCheckpointer(
-      rawFeats.sparkSession)(rawFeats)
+    val feats = rawFeats.cutLineage()
     val postings = feats
       .select(col("media_id"), explode(col("fps")).as("fp"))
       .distinct()

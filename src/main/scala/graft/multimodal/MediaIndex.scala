@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage._
 import graft.sources.Warehouse
 
 /** PERSISTED media feature index — the media analogue of the text dedup
@@ -82,7 +83,7 @@ object MediaIndex {
   }
 
   /** The two per-table writes of one index extension, shared by build and
-    * append. The feature frame is computed ONCE (localCheckpoint — both
+    * append. The feature frame is computed ONCE (a lineage cut — both
     * tables consume it, and the per-byte winnow kernel must never run
     * twice); `_postings` explodes from the truncated frame, not from a
     * re-scan. Write order is load-bearing the same way the text index's
@@ -93,7 +94,7 @@ object MediaIndex {
     * postings (assets that silently stop producing candidates). */
   private def writeIndexTables(rawFeats: DataFrame, prefix: String,
                                append: Boolean): Unit = {
-    val feats = rawFeats.localCheckpoint(true)
+    val feats = rawFeats.cutLineage()
     def write(df: DataFrame, keys: Seq[String], table: String): Unit =
       if (append) Warehouse.appendBucketed(df, keys, table, Buckets)
       else Warehouse.writeBucketed(df, keys, table, Buckets)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.NumericFunctions.duckRound
+import graft.operators.Lineage._
 import graft.sources.Tables
 
 /** Behavioral / sequence analytics over the event stream and order book:
@@ -340,16 +341,14 @@ object Analytics {
   private[graft] def kllLevel(spark: SparkSession, hist0: DataFrame,
                               k: Int): DataFrame = {
     val js = spark.range(KllMaxLevel + 1).select(col("id").as("j"))
-    // LAZY truncation of the ≤49·|scopes|-row state (r16, guide §1.2):
-    // localCheckpoint(false) runs no job here; the first action over this
-    // plan materializes the histogram once and every later reference
-    // reads the blocks. The plan references it four times (scope list +
-    // range join, each under both cnts consumers), and when hist0 is the
+    // Lazy cut of the ≤49·|scopes|-row state (r16, guide §1.2): the plan
+    // references it four times (scope list + range join, each under both
+    // cnts consumers), and when hist0 is the
     // batch-side aggregate each reference re-ran the FULL stratification
     // scan it summarizes — the sketch state is metadata-sized by
     // contract, so materializing it once is exactly what "persist the
     // cells, answer rollups without rescanning" promises.
-    val histM = hist0.localCheckpoint(false)
+    val histM = hist0.cutLineageLazily()
     // aliased column names, not plan aliases: the histogram may be a
     // materialized sink TABLE (the streaming twin), where a same-name
     // self-join trips attribute resolution
@@ -491,9 +490,9 @@ object Analytics {
     // each un-truncated reference re-ran the stratification scan — the
     // sketch state is metadata-sized, so one materialization each is the
     // contract's own "persist the cells once" (r16, guide §1.2/§5).
-    val hist = kllHist(strat).localCheckpoint(false)
+    val hist = kllHist(strat).cutLineageLazily()
     val lvlCells = kllLevel(spark, hist, k)
-    val survCells = kllSurvivors(strat, lvlCells).localCheckpoint(false)
+    val survCells = kllSurvivors(strat, lvlCells).cutLineageLazily()
     // ---- the __all__ cell: STATE-ONLY merge ----
     val histAll = hist.groupBy("tz").agg(sum("c").as("c"))
       .select(lit("__all__").as("scope"), col("tz"), col("c"))
@@ -989,7 +988,7 @@ object Analytics {
     // shuffle runs four times (r16, guide §1.2)
     val baskets = Tables.lineitem(spark, sfDir)
       .select("l_orderkey", "l_partkey").distinct()
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val itemCnt = baskets.groupBy("l_partkey").agg(count(lit(1)).as("cnt"))
     val totals = baskets.agg(countDistinct("l_orderkey").as("n_orders"))
     val pairs = baskets.as("a").join(baskets.as("b"),

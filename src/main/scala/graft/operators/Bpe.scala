@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.operators.Lineage._
 import graft.sources.Tables
 
 /** BPE tokenizer induction over the corpus — the vocabulary-training step
@@ -18,9 +19,9 @@ import graft.sources.Tables
   * literal (the k-means-codebook pattern: tiny loop-carried state lives on
   * the driver, heavy state stays distributed). Rounds cost one
   * vocabulary-sized aggregate each, never a corpus re-scan; vocabulary
-  * lineage is truncated per round via the shared
-  * [[Dedup.RoundCheckpointer]]. Training stops early when no pair is left
-  * to merge — an exhausted round cannot wipe or corrupt the state.
+  * lineage is cut per round via [[Lineage]]. Training stops early when
+  * no pair is left to merge — an exhausted round cannot wipe or corrupt
+  * the state.
   *
   * Merge convention (differential gate): pair counts are integer sums over
   * ALL adjacent positions (overlap counted); the winning pair breaks ties
@@ -229,13 +230,13 @@ object Bpe {
   private[graft] def trainLoopDistributed(wc: DataFrame, merges: Int): (DataFrame, DataFrame) = {
     val spark = wc.sparkSession
     import spark.implicits._
-    val ckpt = new Dedup.RoundCheckpointer(spark)
     // symbol sequence per word: characters space-joined, wrapped in single
     // spaces so a merge rule ' p1 p2 ' matches on symbol boundaries only
-    var seqs = ckpt(wc.select(col("word"), col("wcnt"),
+    var seqs = wc.select(col("word"), col("wcnt"),
       concat(lit(" "),
         trim(regexp_replace(col("word"), "(.)", "$1 ")),
-        lit(" ")).as("seq")))
+        lit(" ")).as("seq"))
+      .cutLineage()
     val rules = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     val byWord = Window.partitionBy("word").orderBy("i")
     var exhausted = false
@@ -256,9 +257,10 @@ object Bpe {
         rules += ((step.toLong, p1, p2, pcnt))
         val pat = lit(s" $p1 $p2 ")
         val rep = lit(s" $p1$p2 ")
-        seqs = ckpt(seqs.withColumn("seq",
+        seqs = seqs.withColumn("seq",
           call_function("replace",
-            call_function("replace", col("seq"), pat, rep), pat, rep)))
+            call_function("replace", col("seq"), pat, rep), pat, rep))
+          .cutLineage()
       }
     }
     (rules.toSeq.toDF("step", "p1", "p2", "pcnt").orderBy("step"), seqs)

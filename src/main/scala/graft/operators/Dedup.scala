@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.operators.Lineage._
 import graft.sources.Tables
 
 /** Deduplication operators for training-data pipelines: exact (hash groupBy),
@@ -152,9 +153,9 @@ object Dedup {
     // once (shingle mass, MEMORY_AND_DISK so it spills, never OOMs);
     // sizes (doc-mass) and prefix (the blocker index, ~(1−t)·|x|+1 rows
     // per doc by construction) are each read 2–3 times downstream.
-    val postings = shinglePostings(spark, sfDir, n).localCheckpoint(true)
+    val postings = shinglePostings(spark, sfDir, n).cutLineage()
     val sizes = postings.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      .localCheckpoint(true)
+      .cutLineage()
     val df = postings.groupBy("s").agg(count(lit(1)).as("df"))
     val byRarity = Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)
     val prefix = postings
@@ -163,7 +164,7 @@ object Dedup {
       .join(sizes, "doc_id")
       .filter(col("rk") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - eps) + 1)
       .select("doc_id", "s", "n_sh")
-      .localCheckpoint(true)
+      .cutLineage()
     val candidates = prefix.as("a")
       .join(prefix.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id") &&
@@ -315,7 +316,7 @@ object Dedup {
     // its eval side 3× and train side 3×, and each un-truncated reference
     // re-ran the explode scan — six evaluations per query. Both sides are
     // filters over one materialized postings frame (MEMORY_AND_DISK).
-    val postings = shinglePostings(spark, sfDir, n).localCheckpoint(true)
+    val postings = shinglePostings(spark, sfDir, n).cutLineage()
     decontaminationFor(
       postings.filter(col("doc_id") % 10 === 0),
       postings.filter(col("doc_id") % 10 =!= 0),
@@ -359,7 +360,7 @@ object Dedup {
     // doc-mass aggregate read twice (prefix length bound + the final
     // containment denominator) — truncate once (r16, guide §1.2)
     val evalSizes = evalP.groupBy("doc_id").agg(count(lit(1)).as("n_ev"))
-      .localCheckpoint(true)
+      .cutLineage()
     val trainDf = trainP.groupBy("s").agg(count(lit(1)).as("df"))
     val byRarity = Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)
     val prefix = evalP
@@ -501,7 +502,7 @@ object Dedup {
     // via bounded) — so the MINHASH AGGREGATE, the most expensive stage
     // of the pipeline, ran up to four times per query. Each frame now
     // computes exactly once; every later reference is a cache read.
-    val postings = shinglePostings(spark, sfDir, n).localCheckpoint(true)
+    val postings = shinglePostings(spark, sfDir, n).cutLineage()
 
     // (band, bandHash, doc_id) — the LSH bucket stream, fully relational:
     // aggregate to signatures, band-hash with the compiled kernel, explode.
@@ -513,10 +514,10 @@ object Dedup {
               posexplode(call_function("graft_bands", col("sig"),
                 lit(numBands), lit(rowsPerBand))))
       .toDF("doc_id", "band", "bhash")
-      .localCheckpoint(true)
+      .cutLineage()
 
     // Guard against degenerate buckets before the self-join (skew control).
-    val bounded = dropOversizedBuckets(bands, maxBucket).localCheckpoint(true)
+    val bounded = dropOversizedBuckets(bands, maxBucket).cutLineage()
 
     val candidates = bounded.as("x")
       .join(bounded.as("y"),
@@ -526,7 +527,7 @@ object Dedup {
       .distinct()
 
     val sizes = postings.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-      .localCheckpoint(true)
+      .cutLineage()
     verifyByPostings(candidates, postings, sizes, threshold)
   }
 
@@ -549,57 +550,6 @@ object Dedup {
 
   // ------------------------------------------------- Connected components
 
-  /** Per-round lineage truncation for iterative DataFrame algorithms,
-    * selected by session conf `graft.iter.checkpoint`. Every mode TRUNCATES
-    * the logical plan — mandatory here, because each star round references
-    * its input several times, so an untruncated plan grows exponentially
-    * with the round count (a mere `persist` caches blocks but lets the plan
-    * explode; measured as an OOM in plan stringification within ~8 rounds).
-    *
-    *  - `"local"` (default): `localCheckpoint(eager)` — fastest, but the
-    *    truncated blocks live only on their executors (memory+disk) and die
-    *    with them. Right for local[n] runs and tests.
-    *  - `"disk"`: `localCheckpoint(eager, DISK_ONLY)` — same executor-local
-    *    truncation without pinning round state in executor memory.
-    *  - `"reliable"`: `checkpoint(eager)` to the SparkContext checkpoint
-    *    directory (set from `graft.iter.checkpointDir` if unset) — blocks
-    *    survive executor loss, so a lost executor costs a task retry, not a
-    *    whole-job restart. The cluster setting for long iterations.
-    */
-  private[graft] final class RoundCheckpointer(spark: SparkSession) {
-    private val mode = spark.conf.get("graft.iter.checkpoint", "local")
-    def apply(df: DataFrame): DataFrame = mode match {
-      case "reliable" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(
-            spark.conf.get("graft.iter.checkpointDir",
-              new java.io.File(sys.props("java.io.tmpdir"), "graft-checkpoints").getPath))
-        df.checkpoint(eager = true)
-      case "disk" =>
-        df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      case _ => df.localCheckpoint(true)
-    }
-
-    /** LAZY truncation: the Catalyst plan is cut immediately (the returned
-      * Dataset is backed by a LogicalRDD either way), but materialization is
-      * deferred to the FIRST action that touches the frame — so a round loop
-      * that was about to run an action anyway (a convergence count, the next
-      * round's probe) fuses the checkpoint job into it: ONE scheduling
-      * barrier per round instead of two (guide §1.2 — fewer passes). The
-      * caller must guarantee that first action evaluates EVERY partition
-      * (count/agg do; take/isEmpty do not) and that the frame is not raced
-      * from concurrent driver threads before materialization (concurrent
-      * first-uses would duplicate the compute). `reliable` mode stays eager:
-      * a lazy reliable checkpoint recomputes its RDD a second time to write
-      * it, which costs more than the barrier it saves. */
-    def lazily(df: DataFrame): DataFrame = mode match {
-      case "reliable" => apply(df)
-      case "disk" =>
-        df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      case _ => df.localCheckpoint(false)
-    }
-  }
-
   /** Connected components of an undirected edge list: every vertex labeled
     * with the smallest vertex id reachable from it.
     *
@@ -611,34 +561,33 @@ object Dedup {
     * that min back to the edges); convergence is a distributed fixed-point
     * check (edge set unchanged), never a collect. The fixed point is a union
     * of stars centered at each component's minimum vertex, which IS the
-    * labeling. Lineage is truncated per round via [[RoundCheckpointer]] so
-    * the plan doesn't grow with the iteration count.
+    * labeling. Lineage is cut per round ([[Lineage]]) so the plan doesn't
+    * grow with the iteration count: each star round references its input
+    * several times, so an uncut plan grows exponentially with the round
+    * count (measured as an OOM in plan stringification within ~8 rounds).
     *
     * Throws if `maxIter` is hit before the fixed point rather than return a
     * wrong labeling. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 50): DataFrame = {
-    val ckpt = new RoundCheckpointer(edges.sparkSession)
     // Canonical directed form (u > v), self-loops dropped, dedup'd.
     // Materialized BEFORE the first round: every round references its input
     // twice (symmetrize + min-join), and without truncation the (possibly
     // expensive) upstream pair join would execute twice.
-    // Lazy truncation + count: the checkpoint materializes inside the count
-    // action it feeds — one scheduling barrier instead of two per step
-    // (guide §1.2; r16). The INNER largeStar checkpoint stays eager:
-    // smallStar references it twice (the symmetrize union), and a lazy
-    // frame raced by two same-stage task branches would duplicate the
-    // join compute before the cache lands.
-    var cur = ckpt.lazily(edges
+    // Lazy cut: the count below is its first action. The INNER largeStar
+    // cut stays eager: smallStar references it twice (the symmetrize
+    // union), two same-stage branches that would race a lazy frame.
+    var cur = edges
       .select(greatest(col(srcCol), col(dstCol)).as("u"),
               least(col(srcCol), col(dstCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
+      .distinct()
+      .cutLineageLazily()
     var nCur = cur.count()
     var converged = false
     var rounds = 0
     while (!converged && rounds < maxIter) {
-      val next = ckpt.lazily(smallStar(ckpt(largeStar(cur))))
+      val next = smallStar(largeStar(cur).cutLineage()).cutLineageLazily()
       val nNext = next.count()
       // Both sides are distinct canonical sets: equal size + empty
       // left-anti difference ⟺ identical edge sets ⟺ star fixed point.
@@ -904,15 +853,12 @@ object Dedup {
     // reads it four times (skew guard + both self-join sides) and nothing
     // else makes those subtrees shareable once one join side broadcasts;
     // re-running the MD5 tokenizer per read would quadruple the dominant
-    // scan cost. Checkpointed (not persisted): blocks are reclaimed by the
-    // context cleaner when the DataFrame is unreferenced, so nothing leaks
-    // into later queries. The mode is the shared `graft.iter.checkpoint`
-    // conf — default executor-local (fastest; an executor loss mid-query
-    // re-runs the query), `reliable` for clusters where a lost executor
-    // must cost a task retry, not the job.
-    val sigs = new RoundCheckpointer(spark)(
-      Tables.documents(spark, sfDir)
-        .select(col("doc_id"), call_function("graft_simhash", col("text")).as("sig")))
+    // scan cost. Cut (not persisted): in the default mode the blocks are
+    // reclaimed by the context cleaner when the DataFrame is unreferenced,
+    // so nothing leaks into later queries.
+    val sigs = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), call_function("graft_simhash", col("text")).as("sig"))
+      .cutLineage()
 
     // Band key must be the UNSIGNED low 16 bits: a signed `% 65536` would
     // give negative keys for negative signatures in band 0 (shift 0 is a
@@ -1052,7 +998,7 @@ object Dedup {
     // references pairs twice, and without it the whole LSH+verify
     // pipeline ran twice per invocation
     val pairs = minhashPairsUnordered(spark, sfDir, n = n, threshold = threshold)
-      .localCheckpoint(true)
+      .cutLineage()
     val src = Tables.documents(spark, sfDir).select(col("doc_id"), col("source"))
     // Symmetrize: a near-dup pair makes BOTH endpoints "a doc with a dup in
     // the other endpoint's source".

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage._
 import graft.sources.{Tables, Warehouse}
 
 /** Incremental near-dup detection against a PERSISTED index — the daily-use
@@ -152,14 +153,12 @@ object IncrementalDedup {
   private def writeIndexTables(docs: DataFrame, prefix: String, p: IndexParams,
                                append: Boolean, cacheInput: Boolean): Unit = {
     val spark = docs.sparkSession
-    // LAZY input truncation (r16, guide §1.2): the signature checkpoint
-    // below is the first action to touch d — on this thread, before the
-    // concurrent table writes exist — so d's materialization fuses into
-    // the sigs job instead of being its own scheduling barrier; the
-    // writes then read d's cached blocks.
-    val d = if (cacheInput) docs.localCheckpoint(false) else docs
+    // Lazy input cut (r16, guide §1.2): the eager signature cut below is
+    // the first action to touch d — on this thread, before the concurrent
+    // table writes exist; the writes then read d's blocks.
+    val d = if (cacheInput) docs.cutLineageLazily() else docs
     val postings = postingsOf(d, p.n)
-    val sigs = new Dedup.RoundCheckpointer(spark)(sigsOf(postings, p))
+    val sigs = sigsOf(postings, p).cutLineage()
     def write(df: DataFrame, keys: Seq[String], table: String): Unit =
       if (append) Warehouse.appendBucketed(df, keys, table, p.buckets)
       else Warehouse.writeBucketed(df, keys, table, p.buckets)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.NumericFunctions.duckRound
 import graft.functions.TextFunctions
+import graft.operators.Lineage._
 import graft.sources.{Tables, Warehouse}
 
 /** Lexical relevance ranking over the document corpus: TF-IDF term
@@ -293,7 +294,7 @@ object Ranking {
     // wedge sides, the closing semi-join, the wedge count) — truncate
     // each once or the upstream edge derivation re-runs per reference
     // (r16, guide §1.2)
-    val undM = und.localCheckpoint(false)
+    val undM = und.cutLineageLazily()
     val deg = undM.select(col("a").as("v")).union(undM.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
     val withDeg = undM
@@ -304,7 +305,7 @@ object Ranking {
         when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("w"),
         when(aFirst, col("db")).otherwise(col("da")).as("dw"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val wedges = oriented.as("x").join(oriented.as("y"),
         col("x.u") === col("y.u") &&
           (col("x.dw") < col("y.dw") ||
@@ -565,13 +566,11 @@ object Ranking {
     // each round references `alive` THREE times (two degree semi-joins +
     // the anti-join), so an untruncated plan grows 3^R-fold — the same
     // blowup the oracle's MATERIALIZED CTEs prevent on the DuckDB side.
-    val ckpt = new graft.operators.Dedup.RoundCheckpointer(docs.sparkSession)
-    val und = ckpt {
-      val directed = denseClassEdges(docs, n)
-      directed.select(col("src").as("ka"), col("dst").as("kb"))
-        .union(directed.select(col("dst").as("ka"), col("src").as("kb")))
-        .distinct()
-    }
+    val directed = denseClassEdges(docs, n)
+    val und = directed.select(col("src").as("ka"), col("dst").as("kb"))
+      .union(directed.select(col("dst").as("ka"), col("src").as("kb")))
+      .distinct()
+      .cutLineage()
     var alive = docs.select(col("doc_id").as("v"))
     def degAmong(frame: DataFrame): DataFrame = und
       .join(frame.select(col("v").as("va")), col("ka") === col("va"))
@@ -585,11 +584,12 @@ object Ranking {
       // the survivor set are filters over that materialized frame — the
       // old form paid a second checkpoint for an anti-join that computes
       // exactly `coalesce(d, 0) ≥ k`. ONE action per round (r16, guide
-      // §1.2): the checkpoint is lazy and the peel-fixpoint probe is an
+      // §1.2): the cut is lazy and the peel-fixpoint probe is an
       // aggregate over it, so materialization and the emptiness check
       // share a single job instead of a checkpoint job + an isEmpty job.
-      val scored = ckpt.lazily(alive.join(degAmong(alive), col("v") === col("ka"), "left")
-        .select(col("v"), coalesce(col("d"), lit(0L)).as("d")))
+      val scored = alive.join(degAmong(alive), col("v") === col("ka"), "left")
+        .select(col("v"), coalesce(col("d"), lit(0L)).as("d"))
+        .cutLineageLazily()
       val nPeeled = scored.agg(count(when(col("d") < k, lit(1)))).head().getLong(0)
       // EARLY EXIT at the peel fixpoint (guide §1.2, don't compute what
       // you throw away): a round that removes nothing leaves `alive`
@@ -656,7 +656,7 @@ object Ranking {
       .select(least(col("src"), col("dst")).as("a"),
               greatest(col("src"), col("dst")).as("b"))
       .distinct()
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
     val withDeg = und
@@ -670,7 +670,7 @@ object Ranking {
       when(aFirst, col("a")).otherwise(col("b")).as("src"),
       when(aFirst, col("b")).otherwise(col("a")).as("dst"),
       when(aFirst, col("db")).otherwise(col("da")).as("ddeg"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val e1 = oriented.as("e1"); val e2 = oriented.as("e2")
     val wedges = e1.join(e2,
         col("e1.src") === col("e2.src") &&
@@ -711,7 +711,7 @@ object Ranking {
     require(n > 0, "cocitationFrom: empty corpus")
     // edges feeds three references (in-degree + both pair-join sides) —
     // truncate once (r16, guide §1.2)
-    val edges = affineEdges(docs, n).localCheckpoint(false)
+    val edges = affineEdges(docs, n).cutLineageLazily()
     val inDeg = edges.groupBy("dst").agg(count(lit(1)).as("ind"))
     val pairs = edges.as("x").join(edges.as("y"),
         col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
@@ -763,11 +763,10 @@ object Ranking {
     * frontier order and partitioning cannot change any label
     * (integer-exact, no floats anywhere).
     *
-    * 100 TB: edges materialize once (checkpointed) and every round
-    * re-reads that one artifact; lineage is truncated per round via
-    * [[graft.operators.Dedup.RoundCheckpointer]] (the
-    * connectedComponents discipline — an untruncated plan would nest R
-    * joins deep); the per-round `isEmpty` early-exit reads one boolean
+    * 100 TB: edges materialize once (cut) and every round re-reads that
+    * one artifact; lineage is cut per round via [[Lineage]] (the
+    * connectedComponents discipline — an uncut plan would nest R joins
+    * deep); the per-round `isEmpty` early-exit reads one boolean
     * action on the already-checkpointed frontier, not a collect of it;
     * fan-out per round is bounded by out-degree (a crawl-policy constant,
     * ≤3 here by construction), never by in-degree. */
@@ -781,17 +780,17 @@ object Ranking {
     val n = docs.count()
     require(n > 0, "seedHopsFrom: empty corpus")
     require(maxHops >= 0, s"seedHopsFrom: negative horizon $maxHops")
-    val ckpt = new graft.operators.Dedup.RoundCheckpointer(docs.sparkSession)
-    val edges = ckpt(affineEdges(docs, n))
-    // Lazy truncation + count (r16, guide §1.2): each round runs exactly
+    val edges = affineEdges(docs, n).cutLineage()
+    // Lazy cut + count (r16, guide §1.2): each round runs exactly
     // ONE action — the count that materializes the round's checkpoint IS
     // the exhaustion probe — where the r15 form paid a checkpoint job, an
     // isEmpty job, AND a settled-set re-materialization per round. The
     // settled set needs no checkpoint of its own: it is a union of
     // already-materialized round frontiers (≤ maxHops of them, so the
     // plan stays constant-depth), read from their cached blocks.
-    var dist = ckpt.lazily(docs.filter(col("doc_id") % SeedHopsSeedMod === 0)
-      .select(col("doc_id").as("v"), lit(0L).as("hops")))
+    var dist = docs.filter(col("doc_id") % SeedHopsSeedMod === 0)
+      .select(col("doc_id").as("v"), lit(0L).as("hops"))
+      .cutLineageLazily()
     var frontier = dist
     var r = 1
     var exhausted = frontier.count() == 0L
@@ -799,10 +798,11 @@ object Ranking {
       // expand the frontier one hop, keep only first-time vertices: the
       // distinct collapses multi-inlink duplicates BEFORE the anti-join
       // so the settled-set probe sees each candidate once
-      val next = ckpt.lazily(frontier.join(edges, col("v") === col("src"))
+      val next = frontier.join(edges, col("v") === col("src"))
         .select(col("dst").as("v")).distinct()
         .join(dist, Seq("v"), "left_anti")
-        .select(col("v"), lit(r.toLong).as("hops")))
+        .select(col("v"), lit(r.toLong).as("hops"))
+        .cutLineageLazily()
       exhausted = next.count() == 0L
       // fold the round in only when it found anything: unioning an empty
       // frontier in would be a wasted plan node on the terminal round
@@ -863,18 +863,19 @@ object Ranking {
     val n = docs.count()
     require(n > 0, "seedCostsFrom: empty corpus")
     require(maxHops >= 0, s"seedCostsFrom: negative horizon $maxHops")
-    val ckpt = new graft.operators.Dedup.RoundCheckpointer(docs.sparkSession)
-    val edges = ckpt(affineEdges(docs, n)
-      .withColumn("w", (col("src") + col("dst")) % SeedCostWeightMod + 1L))
-    // Lazy truncation + count (r16, guide §1.2): ONE action per round —
+    val edges = affineEdges(docs, n)
+      .withColumn("w", (col("src") + col("dst")) % SeedCostWeightMod + 1L)
+      .cutLineage()
+    // Lazy cut + count (r16, guide §1.2): ONE action per round —
     // the count materializing the improved set doubles as the exhaustion
     // probe — where the r15 form paid a checkpoint job, an isEmpty job,
     // and an eager settled-map re-aggregation per round. The settled map
     // keeps its per-round min-collapse (it must stay vertex-mass) but
-    // checkpoints LAZILY: it materializes inside the next round's count
+    // is cut LAZILY: it materializes inside the next round's count
     // (or the final label join), never as its own barrier.
-    var best = ckpt.lazily(docs.filter(col("doc_id") % SeedHopsSeedMod === 0)
-      .select(col("doc_id").as("v"), lit(0L).as("cost")))
+    var best = docs.filter(col("doc_id") % SeedHopsSeedMod === 0)
+      .select(col("doc_id").as("v"), lit(0L).as("cost"))
+      .cutLineageLazily()
     var frontier = best
     var r = 1
     var exhausted = frontier.count() == 0L
@@ -884,14 +885,16 @@ object Ranking {
       val cand = frontier.join(edges, col("v") === col("src"))
         .select(col("dst").as("v"), (col("cost") + col("w")).as("cost"))
         .groupBy("v").agg(min("cost").as("cost"))
-      val improved = ckpt.lazily(cand
+      val improved = cand
         .join(best.toDF("v", "old"), Seq("v"), "left")
         .filter(col("old").isNull || col("cost") < col("old"))
-        .select(col("v"), col("cost")))
+        .select(col("v"), col("cost"))
+        .cutLineageLazily()
       exhausted = improved.count() == 0L
       if (!exhausted) {
-        best = ckpt.lazily(best.unionByName(improved)
-          .groupBy("v").agg(min("cost").as("cost")))
+        best = best.unionByName(improved)
+          .groupBy("v").agg(min("cost").as("cost"))
+          .cutLineageLazily()
         frontier = improved
       }
       r += 1
@@ -947,7 +950,7 @@ object Ranking {
     *
     * 100 TB: each round is two Pregel-shaped equi-joins (edge list against
     * labels, one per direction) + two partial-agg'd mins + one label
-    * update, lineage truncated per round (RoundCheckpointer); convergence
+    * update, lineage cut per round ([[Lineage]]); convergence
     * is detected by the strictly-decreasing label-sum invariant (labels
     * only ever decrease, so one cheap scalar aggregate per round replaces
     * a diff join); rounds track the graph's reachability radius (≲ log n
@@ -986,14 +989,14 @@ object Ranking {
   def linkCyclesFrom(docs: DataFrame): DataFrame = {
     val n = docs.count()
     require(n > 0, "linkCyclesFrom: empty corpus")
-    val ckpt = new graft.operators.Dedup.RoundCheckpointer(docs.sparkSession)
-    val edges = ckpt(citationEdges(docs, n))
+    val edges = citationEdges(docs, n).cutLineage()
     // labels (v, f, b): f = min known ancestor, b = min known descendant.
-    // LAZY checkpoint + fused probe (r16, guide §1.2): the label frame's
+    // LAZY cut + fused probe (r16, guide §1.2): the label frame's
     // materialization happens inside the labSum action, so each round is
     // ONE job — the r15 form paid a checkpoint job plus the labSum job.
-    var lab = ckpt.lazily(docs.select(col("doc_id").as("v"),
-      col("doc_id").as("f"), col("doc_id").as("b")))
+    var lab = docs.select(col("doc_id").as("v"),
+        col("doc_id").as("f"), col("doc_id").as("b"))
+      .cutLineageLazily()
     // labels only DECREASE, so Σ(f+b) strictly decreases iff any label
     // moved — one scalar action per round instead of a diff join
     def labSum(l: DataFrame): Long =
@@ -1009,10 +1012,11 @@ object Ranking {
     // exchanges, same mins (min over the f-tagged messages IS the old
     // fIn, ditto bIn; an absent group stays NULL exactly like the old
     // left join's miss).
-    val msgs = ckpt(edges.select(col("src").as("s"), col("dst").as("rcv"),
+    val msgs = edges.select(col("src").as("s"), col("dst").as("rcv"),
         lit("f").as("kind"))
       .unionByName(edges.select(col("dst").as("s"), col("src").as("rcv"),
-        lit("b").as("kind"))))
+        lit("b").as("kind")))
+      .cutLineage()
     while (!converged && r < SccMaxRounds) {
       val in = msgs.join(lab, col("s") === col("v"))
         .groupBy("rcv")
@@ -1021,11 +1025,12 @@ object Ranking {
       // lab appears twice in this round's plan (message join + label
       // update), but both references sit in the SAME job and the prior
       // round's labSum already materialized it — cache hits, no race
-      lab = ckpt.lazily(lab
+      lab = lab
         .join(in, col("v") === col("rcv"), "left")
         .select(col("v"),
           least(col("f"), coalesce(col("fc"), col("f"))).as("f"),
-          least(col("b"), coalesce(col("bc"), col("b"))).as("b")))
+          least(col("b"), coalesce(col("bc"), col("b"))).as("b"))
+        .cutLineageLazily()
       val s = labSum(lab)
       converged = s == prevSum
       prevSum = s

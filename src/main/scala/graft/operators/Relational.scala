@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.NumericFunctions.duckRound
+import graft.operators.Lineage._
 import graft.sources.Tables
 
 /** Relational breadth beyond the reference's map/shuffle/reduce shape:
@@ -618,7 +619,7 @@ object Relational {
                expr("substring(s, pos + 1, length(s))")).as("key"))
       // both self-join sides read this L-fold exploded stream — truncate
       // once or the scan+explode runs twice (r16, guide §1.2)
-      .localCheckpoint(false)
+      .cutLineageLazily()
     // The blocking is EXACT, not a candidate filter: equal length (same
     // positions masked), same masked position and same masked key mean the
     // strings can differ only at that position — hamming ≤ 1 by

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
+import graft.operators.Lineage._
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table
@@ -263,28 +264,24 @@ object Similarity {
     // The training sample is referenced once per Lloyd round (assignment)
     // plus the seed selection and the explode below — each reference
     // re-ran the upstream scan (for the TEXT codebook that scan re-hashes
-    // every document). Truncate LAZILY (r16, guide §1.2/§5): the seed
-    // collect below is the first action and evaluates every partition, so
-    // the sample materializes inside a job the loop was paying anyway,
-    // and the sequential per-round jobs then read the cache — same scan
-    // savings as an eager checkpoint, zero added barriers.
+    // every document). Cut LAZILY (r16, guide §1.2/§5): the seed collect
+    // below is the first action and evaluates every partition.
     val eTrain =
       (if (sampleStride > 1) e.filter(col("vec_id") % sampleStride === 0) else e)
-        .localCheckpoint(false)
+        .cutLineageLazily()
     // Exploded TRAINING coordinates (r16, guide §1.2): (a) over eTrain,
     // not e — the per-round inner join with the sample's assignments
     // drops every non-sample row anyway, so exploding the full corpus
     // computed dim×(stride−1)/stride of the rows only to discard them
-    // (identical sums, provably); (b) truncated LAZILY — round 1's
-    // centroid collect is the first action (one reference, all
-    // partitions via the groupBy), so iv materializes inside a job the
-    // loop already pays and rounds 2+ read the cache instead of
-    // re-running the explode per iteration. Sample-mass × dim rows.
+    // (identical sums, provably); (b) cut LAZILY — round 1's centroid
+    // collect is the first action (one reference, all partitions via the
+    // groupBy), and rounds 2+ read the blocks instead of re-running the
+    // explode per iteration. Sample-mass × dim rows.
     val iv = eTrain.select(col("vec_id"), posexplode(col("embedding")))
       .toDF("vec_id", "i", "x")
       .select(col("vec_id"), col("i"),
               floor(col("x").cast("double") * lit(KmeansScale)).cast("long").as("ivx"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     var cents = driverLocal(
       eTrain.filter(col("vec_id") < numCentroids.toLong * sampleStride)
         .select(col("vec_id").cast("int").as("cent_id"), col("embedding").as("cemb")))
@@ -680,7 +677,7 @@ object Similarity {
                 numCentroids: Int = 0, iters: Int = 3): DataFrame = {
     // the k-NN join feeds BOTH direction filters below — truncate once or
     // the whole all-vector neighbor search runs twice (r16, guide §1.2)
-    val kj = knnJoin(spark, sfDir, k, numCentroids, iters).localCheckpoint(false)
+    val kj = knnJoin(spark, sfDir, k, numCentroids, iters).cutLineageLazily()
     val fwd = kj.filter(col("vec_id") < col("neighbor_id"))
       .select(col("vec_id").as("a"), col("neighbor_id").as("b"),
               col("cos"), col("rnk").as("rank_ab"))
@@ -846,7 +843,7 @@ object Similarity {
     // + join + aggregate passes (r16, guide §1.2)
     val ctf = toks.join(cells, Seq("doc_id"))
       .groupBy("cell", "word").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val cdf = ctf.groupBy("word").agg(count(lit(1)).as("df"))
     val ncl = ctf.agg(countDistinct("cell").as("ncells"))
     val w = Window.partitionBy("cell").orderBy(col("score").desc, col("word").asc)

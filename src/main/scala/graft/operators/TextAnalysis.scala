@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.functions.NumericFunctions.duckRound
+import graft.operators.Lineage._
 import graft.sources.Tables
 
 /** Text-analysis operators for a training-data pipeline: corpus statistics,
@@ -944,14 +945,14 @@ object TextAnalysis {
     // re-ran the tokenize+explode+hash scan — the expensive part of the
     // whole operator. Checkpoint the compact (doc, source, bucket, count)
     // frame once and the 1024-row profile once; every branch reads cache.
-    val feats = dsirFeatures(docs).localCheckpoint(false)
+    val feats = dsirFeatures(docs).cutLineageLazily()
     // prof truncates LAZILY: its two readers (Δ and cal) are broadcast
     // futures that may race the first materialization, but the racing
     // compute is a 1024-row aggregate over feats' CACHED blocks — benign —
     // while an eager checkpoint would cost a scheduling barrier
     val prof = feats.groupBy("b").agg(sum("c").as("cp"),
       sum(when(col("source") === DsirTargetSource, col("c")).otherwise(0L)).as("cq"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val delta = prof.select(col("b"),
       (length(bin(col("cq") + 1)) - length(bin(col("cp") + 1))).cast("long").as("d"))
     val cal = prof.agg(
@@ -996,7 +997,7 @@ object TextAnalysis {
     // so no pass over raw documents remains beyond the weight computation.
     val w = dsirWeightsFrom(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("w_bits"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val hist = w.groupBy("w_bits").agg(count(lit(1)).as("m"))
       .withColumn("cum", sum("m").over(Window.orderBy(col("w_bits").desc)))
     val n1 = hist.agg(sum("m").as("n"))
@@ -1584,16 +1585,16 @@ object TextAnalysis {
               explode(call_function("graft_winnow", col("text"), lit(window), lit(w))).as("s"))
       .select(col("doc_id"), col("s.fp").as("fp"))
       .distinct() // one posting per (doc, hash): a value re-selected at two positions counts once
-      .localCheckpoint(false)
+      .cutLineageLazily()
     // hot (the boilerplate list — hashes in > maxDocFreq docs) is tiny by
     // construction at any corpus size: broadcast it explicitly, because
     // sel's checkpoint hides the estimate that used to let the planner
     // see that (r16, guide §3.1)
     val hot = sel.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDocFreq).select("fp")
-    val cold = sel.join(broadcast(hot), Seq("fp"), "left_anti").localCheckpoint(false)
+    val cold = sel.join(broadcast(hot), Seq("fp"), "left_anti").cutLineageLazily()
     val perDoc = cold.groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val pairs = cold.as("a")
       .join(cold.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
@@ -1635,13 +1636,13 @@ object TextAnalysis {
     // concurrency (a race costs at most the old duplicate compute) while
     // sequential reuse hits the cache. hot is broadcast explicitly
     // (boilerplate list — tiny by contract).
-    val cold = chunks.join(broadcast(hot), Seq("fp"), "left_anti").localCheckpoint(false)
+    val cold = chunks.join(broadcast(hot), Seq("fp"), "left_anti").cutLineageLazily()
     val truth = cold.as("a")
       .join(cold.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-      .localCheckpoint(false)
+      .cutLineageLazily()
     val approx = winnowMatchesFrom(Tables.documents(spark, sfDir),
         window, w, maxDocFreq, minShared = 1)
       .select("doc_a", "doc_b")
@@ -1821,10 +1822,10 @@ object TextAnalysis {
     // (dominant) full-corpus Karp–Rabin pass is materialized once instead
     // of evaluated twice (the simhashPairs discipline; blocks are
     // reclaimed when the frame is unreferenced).
-    val chunks = new Dedup.RoundCheckpointer(docs.sparkSession)(
-      docs.select(col("doc_id"),
+    val chunks = docs.select(col("doc_id"),
         posexplode(call_function("graft_chunks", col("text"), lit(window)))
-          .as(Seq("pos", "chunk_fp"))))
+          .as(Seq("pos", "chunk_fp")))
+      .cutLineage()
     val dupFps = chunks.groupBy("chunk_fp")
       .agg(countDistinct("doc_id").as("n_docs"))
       .filter(col("n_docs") >= minDocs)
@@ -1870,10 +1871,10 @@ object TextAnalysis {
   def excisePassagesFrom(docs: DataFrame, window: Int, minDocs: Int): DataFrame = {
     // same shared-chunk-frame materialization as dedupPassagesFrom: the
     // Karp–Rabin pass feeds both the reach aggregate and the coverage join
-    val chunks = new Dedup.RoundCheckpointer(docs.sparkSession)(
-      docs.select(col("doc_id"),
+    val chunks = docs.select(col("doc_id"),
         posexplode(call_function("graft_chunks", col("text"), lit(window)))
-          .as(Seq("pos", "chunk_fp"))))
+          .as(Seq("pos", "chunk_fp")))
+      .cutLineage()
     val dupFps = chunks.groupBy("chunk_fp")
       .agg(countDistinct("doc_id").as("n_docs"))
       .filter(col("n_docs") >= minDocs)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.functions.NumericFunctions.duckRound
 import graft.functions.TextFunctions
+import graft.operators.Lineage._
 
 /** Structured Streaming forms of the engine's analytics: the same logical
   * transforms as `graft.operators.Relational`/`Dedup`, expressed over an
@@ -280,16 +281,12 @@ object EventStreams {
       .foreach(t => spark.catalog.dropTempView(t.name))
     sinkPrefixes.add(prefix)
     val name = s"${prefix}_${runSeq.incrementAndGet()}"
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val streamParts = math.min(prevParts.toInt, widthOverride.getOrElse(
-      spark.conf.get("graft.stream.shufflePartitions", "8").toInt))
     // Fresh (createTempDirectory — never a resumable leftover: a stale
     // same-name checkpoint would make the replay skip already-committed
     // source files and materialize a PARTIAL table) ephemeral checkpoint
     // on fast local scratch, deleted on completion.
     val ckptDir = java.nio.file.Files.createTempDirectory(checkpointRoot(spark), name)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
+    try withConf(spark, "spark.sql.shuffle.partitions", streamWidth(spark, widthOverride)) {
       val q = streamed.writeStream
         .format("memory")
         .queryName(name)
@@ -298,20 +295,42 @@ object EventStreams {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      // best-effort scratch delete; state-store providers may still hold
-      // open handles on failure paths — hygiene, not correctness
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-                        catch { case _: Throwable => () })
-      } catch { case _: Throwable => () }
-    }
+    } finally deleteQuietly(ckptDir)
     spark.table(name)
   }
+
+  /** The shuffle width streaming-scoped work plans at (see
+    * [[runToCompletion]]): `graft.stream.shufflePartitions` (default 8) or
+    * `widthOverride`, never above the session value. */
+  private def streamWidth(spark: SparkSession, widthOverride: Option[Int] = None): String =
+    math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, widthOverride.getOrElse(
+      spark.conf.get("graft.stream.shufflePartitions", "8").toInt)).toString
+
+  /** Runs `body` with session conf `key` set to `value`, then restores the
+    * previous value, or unsets the key when it had none. */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(p) => spark.conf.set(key, p)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  /** Best-effort recursive delete of a scratch checkpoint dir: state-store
+    * providers may still hold open handles on failure paths — hygiene, not
+    * correctness. */
+  private def deleteQuietly(dir: java.nio.file.Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(p => try java.nio.file.Files.deleteIfExists(p)
+                      catch { case _: Throwable => () })
+    } catch { case _: Throwable => () }
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Driver-verified: the tumbling-window aggregation run as a REAL
     * streaming query over the events table, materialized at end-of-stream.
@@ -1870,19 +1889,13 @@ object EventStreams {
                                      in: org.apache.spark.sql.Dataset[QuotaIn],
                                      cap: Long): DataFrame = {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass", RocksDbProvider) {
       val out = in.groupByKey(_.source)
         .transformWithState(new QuotaProcessor(cap),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append())
       runToCompletion(spark, out.toDF(), "stream_quota", OutputMode.Append())
         .orderBy("source", "doc_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -1955,19 +1968,13 @@ object EventStreams {
                                in: org.apache.spark.sql.Dataset[KanonIn],
                                k: Int): DataFrame = {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass", RocksDbProvider) {
       val out = in.groupByKey(r => r.lang + "\u0001" + r.source)
         .transformWithState(new KanonProcessor(k),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append())
       runToCompletion(spark, out.toDF(), "stream_kanon", OutputMode.Append())
         .orderBy("doc_id")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -2068,19 +2075,13 @@ object EventStreams {
       in: org.apache.spark.sql.Dataset[NoisedIn],
       k: Int, capMag: Int): DataFrame = {
     import spark.implicits._
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass", RocksDbProvider) {
       val out = in.groupByKey(r => r.lang + "\u0001" + r.source)
         .transformWithState(new NoisedReleaseProcessor(k, capMag),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append())
       runToCompletion(spark, out.toDF(), "stream_noised", OutputMode.Append())
         .orderBy("lang", "source", "release_idx")
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None    => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -2335,15 +2336,11 @@ object EventStreams {
     // runToCompletion: streaming-scoped work plans at the streaming
     // partition count. (Bucket counts are unaffected; every result here is
     // partition-independent.)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val streamParts = math.min(prevParts.toInt,
-      spark.conf.get("graft.stream.shufflePartitions", "8").toInt)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
+    withConf(spark, "spark.sql.shuffle.partitions", streamWidth(spark)) {
       streamIngestToIndex(spark, stream, prefix, p, threshold, pairsTable,
         overlayPrefix = Some(overlay))
         .orderBy("doc_a", "doc_b")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Drop one single-file parquet batch into a file-stream directory with
@@ -2466,7 +2463,7 @@ object EventStreams {
       .foreach(d => writer.option("checkpointLocation", d))
     val writerQ = writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch's localCheckpoint truncation blocks are released at
+        // the batch's lineage-cut blocks are released at
         // batch end — an unbounded stream must not accumulate one block
         // set per micro-batch for the checkpoint's lifetime
         val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -2490,19 +2487,17 @@ object EventStreams {
           pfxs.map(pfx => spark.table(s"${pfx}_sizes").select(col("doc_id")))
             .reduce(_ unionByName _),
           Seq("doc_id"), "left_anti")
-          .localCheckpoint(true)
+          .cutLineage()
         // index pairs (batch vs each store) ∪ intra-batch pairs (batch vs
         // itself, doc_a > doc_b so doc_a is the dropped side in both).
-        // LAZY truncation (r16, guide §1.2): pairs still cuts the plan (it
-        // is read three times downstream), but its materialization fuses
-        // into the pairs write — the first action to touch it, on this
-        // thread, with a single reference in that plan — instead of being
-        // its own scheduling barrier; the later reads hit the cache.
+        // Lazy cut (r16, guide §1.2): pairs is read three times
+        // downstream, and the pairs write is the first action to touch
+        // it — on this thread, with a single reference in that plan.
         val pairs = pfxs
           .map(pfx => IncrementalDedup.deltaAgainst(spark, fresh, pfx, p, threshold))
           .reduce(_ unionByName _)
           .unionByName(IncrementalDedup.selfPairs(fresh, p, threshold))
-          .localCheckpoint(false)
+          .cutLineageLazily()
         // IDEMPOTENT append: a replayed batch's documents fail the ledger
         // filter and never reach the index, but their pairs would be
         // re-verified and re-written — anti-join against the stored pair
@@ -2539,15 +2534,7 @@ object EventStreams {
     try {
       val q = writerQ.start()
       q.awaitTermination()
-    } finally ephemeralCkpt.foreach { d =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(d).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => try java.nio.file.Files.deleteIfExists(p)
-                        catch { case _: Throwable => () })
-      } catch { case _: Throwable => () }
-    }
+    } finally ephemeralCkpt.foreach(deleteQuietly)
     if (spark.catalog.tableExists(pairsTable)) {
       // the pair appends also happened under the cloned session; the
       // per-batch refresh above covers batches that fired, but a run whose

@@ -88,7 +88,7 @@ object ScaleProbe {
                             "noised_release", "triangle_participation",
                             "lapsed_big_accounts")).toList
     val srcDir = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Hold the live-probe marker for the whole run so a concurrently
     // launched Bench's pre-seal sweep doesn't delete this probe's staged
     // corpus mid-measurement (released in the finally below; deleteOnExit

@@ -204,17 +204,23 @@ class DedupSpec extends SparkSpecBase {
     assert(!minIdOnly, "expected at least one cluster whose best member is not the min id")
   }
 
-  test("connectedComponents is identical under every checkpoint mode") {
+  test("cut sites give identical rows under every checkpoint mode") {
     import spark.implicits._
     val edges = ((100L until 111L).map(i => (i, i + 1)) ++
       Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 20L), (50L, 51L))).toDF("a", "b")
-    def run(): Set[(Long, Long)] =
-      Dedup.connectedComponents(edges, "a", "b")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val local = run()
-    for (mode <- Seq("disk", "reliable")) {
+    def rows(df: => org.apache.spark.sql.DataFrame): () => Seq[String] =
+      () => df.collect().map(_.toString).sorted.toSeq
+    val runs = ("connectedComponents" -> rows(Dedup.connectedComponents(edges, "a", "b"))) +:
+      Seq("dedup_minhash", "winnow_matches", "quantile_sketch_kll", "fuzzy_names",
+          "basket_affinity", "knn_join")
+        .map(q => q -> rows(SparkEntry.queries(q)(spark, sf0001)))
+    val local = runs.map { case (_, run) => run() }
+    for (mode <- Seq("reliable")) {
       spark.conf.set("graft.iter.checkpoint", mode)
-      try assert(run() === local, s"mode=$mode")
+      try runs.zip(local).foreach { case ((name, run), expected) =>
+        assert(expected.nonEmpty, name)
+        assert(run() === expected, s"$name mode=$mode")
+      }
       finally spark.conf.unset("graft.iter.checkpoint")
     }
   }
