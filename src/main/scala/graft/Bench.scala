@@ -58,6 +58,8 @@ object Bench {
     // blocks live ONLY here — they never register with the CacheManager)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    // reliable-mode lineage cuts keep their blocks as files instead
+    graft.operators.Lineage.dropCheckpointFiles(spark)
     // unload state-store providers and park the maintenance thread; the
     // next streaming query restarts both lazily
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()

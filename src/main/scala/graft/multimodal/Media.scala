@@ -1163,11 +1163,11 @@ object Media {
     * definition site, the source CTE swapped). */
   def mediaNearDupPacked(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensurePackedNearDup(spark, sfDir)
-    nearDupFromFeatures(nearDupFeaturesPacked(spark.read.parquet(dir)))
+    nearDupFromFeatures(nearDupFeaturesPacked(graft.sources.Tables.parquet(spark, dir)))
   }
   def mediaDupPaddedPacked(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensurePackedPadded(spark, sfDir)
-    paddedDupFromFeatures(paddedDupFeaturesPacked(spark.read.parquet(dir)))
+    paddedDupFromFeatures(paddedDupFeaturesPacked(graft.sources.Tables.parquet(spark, dir)))
   }
 
   /** Root for the PACKED encoded-copy universe ([[ensurePackedEncoded]]) —
@@ -1215,7 +1215,7 @@ object Media {
     * staged shards and replays the identical chain over `hex(payload)`. */
   def mediaDupEncodedPacked(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensurePackedEncoded(spark, sfDir)
-    encodedDupFromFeatures(encodedDupFeaturesPacked(spark.read.parquet(dir)))
+    encodedDupFromFeatures(encodedDupFeaturesPacked(graft.sources.Tables.parquet(spark, dir)))
   }
 
   /** Retention pass over every staged media root: keep each root's live

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Lineage._
-import graft.sources.Warehouse
+import graft.sources.{Tables, Warehouse}
 
 /** PERSISTED media feature index — the media analogue of the text dedup
   * index ([[graft.operators.IncrementalDedup]]'s five-table discipline):
@@ -115,7 +115,7 @@ object MediaIndex {
     val fp = Warehouse.sourceFingerprint(sfDir, "documents") +
       s"-drop101v1|$split|k${Media.EncodedWinnowK}w${Media.EncodedWinnowW}x$Buckets"
     Warehouse.ensureDerivedTables(spark, tableNames(prefix), fp) {
-      val universe = spark.read.parquet(dir)
+      val universe = Tables.parquet(spark, dir)
       val assets =
         if (split == "corp") universe.filter(col("media_id") % DeltaMod =!= 0)
         else universe
@@ -228,7 +228,7 @@ object MediaIndex {
     val prefix = buildIndex(spark, sfDir, "corp")
     requireNotMidAppend(spark, prefix)
     val dropDir = Media.ensurePackedEncodedDrop(spark, sfDir)
-    crossPairsCore(dropFeatures(spark.read.parquet(dropDir)), prefix)
+    crossPairsCore(dropFeatures(Tables.parquet(spark, dropDir)), prefix)
       .orderBy("canonical_id", "dup_id")
   }
 
@@ -474,7 +474,7 @@ object MediaIndex {
     val current = tables.forall(t => spark.catalog.tableExists(t) &&
       Warehouse.storedFingerprint(spark, t).contains(fpFull))
     if (!current) {
-      val universe = spark.read.parquet(dir)
+      val universe = Tables.parquet(spark, dir)
       Warehouse.ensureDerivedTables(spark, tables, fpBase) {
         writeIndexTables(
           fullFeatures(universe.filter(col("media_id") % DeltaMod =!= 0)),
@@ -602,7 +602,7 @@ object MediaIndex {
     val fp = Warehouse.sourceFingerprint(sfDir, "documents") +
       s"-release4v1|rel|pairs2|k${Media.EncodedWinnowK}w${Media.EncodedWinnowW}x$Buckets"
     Warehouse.ensureDerivedTables(spark, releaseTableNames(prefix), fp) {
-      writeReleaseScanTables(spark.read.parquet(dir), prefix, append = false)
+      writeReleaseScanTables(Tables.parquet(spark, dir), prefix, append = false)
       deriveReleasePairTables(spark, prefix)
     }
     prefix
@@ -798,7 +798,7 @@ object MediaIndex {
     val current = tables.forall(t => spark.catalog.tableExists(t) &&
       Warehouse.storedFingerprint(spark, t).contains(fpFull))
     if (!current) {
-      val universe = spark.read.parquet(dir)
+      val universe = Tables.parquet(spark, dir)
       Warehouse.ensureDerivedTables(spark, tables, fpBase) {
         writeReleaseScanTables(
           universe.filter(col("media_id") % DeltaMod =!= 0), prefix,

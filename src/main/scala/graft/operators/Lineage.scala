@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The one way this engine cuts a plan's lineage, so session conf
   * `graft.iter.checkpoint` decides where every cut's blocks live. A cut
@@ -14,8 +15,10 @@ import org.apache.spark.sql.DataFrame
   *  - `reliable`: `checkpoint(eager = true)` into the context checkpoint
   *    dir, set from `graft.iter.checkpointDir` when the context has none.
   *    A lost executor costs a task retry, not the job. Always eager: a
-  *    lazy reliable checkpoint computes its RDD twice to write it. Nothing
-  *    deletes the files (Spark's `cleanCheckpoints` is off by default). */
+  *    lazy reliable checkpoint computes its RDD twice to write it. Spark's
+  *    `cleanCheckpoints` is off by default, so the files stay until
+  *    [[dropCheckpointFiles]] runs or, when this object set the dir, the
+  *    JVM exits. */
 object Lineage {
   implicit final class LineageCut(private val df: DataFrame) extends AnyVal {
     /** Cuts the lineage and materializes the frame now (one job). */
@@ -35,12 +38,28 @@ object Lineage {
     spark.conf.get("graft.iter.checkpoint", "local") match {
       case "local" => df.localCheckpoint(eager)
       case "reliable" =>
-        if (spark.sparkContext.getCheckpointDir.isEmpty)
-          spark.sparkContext.setCheckpointDir(spark.conf.get("graft.iter.checkpointDir",
+        val sc = spark.sparkContext
+        if (sc.getCheckpointDir.isEmpty) {
+          sc.setCheckpointDir(spark.conf.get("graft.iter.checkpointDir",
             new java.io.File(sys.props("java.io.tmpdir"), "graft-checkpoints").getPath))
+          // Spark made a fresh <uuid> dir under that root for this context
+          val dir = new Path(sc.getCheckpointDir.get)
+          dir.getFileSystem(sc.hadoopConfiguration).deleteOnExit(dir)
+        }
         df.checkpoint(eager = true)
       case other => throw new IllegalArgumentException(
         s"graft.iter.checkpoint must be local or reliable, got '$other'")
     }
   }
+
+  /** Deletes the `rdd-*` files that reliable cuts wrote under the context
+    * checkpoint dir. Call between queries, when no frame of the finished
+    * query is read again. */
+  def dropCheckpointFiles(spark: SparkSession): Unit =
+    spark.sparkContext.getCheckpointDir.foreach { d =>
+      val dir = new Path(d)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("rdd-"))
+        .foreach(fs.delete(_, true))
+    }
 }

@@ -560,7 +560,7 @@ object Pipeline {
     val out = new java.io.File({ val r = Warehouse.fastScratchRoot; new java.io.File(r).mkdirs(); r },
       s"graft_zorder_${Warehouse.pathToken(sfDir)}_d${dimBits}x$bins").getPath
     writeZorderExport(spark, sfDir, out, dimBits, bins)
-    spark.read.parquet(out)
+    graft.sources.Tables.parquet(spark, out)
       .groupBy(col("bucket").cast("bigint").as("bucket"))
       .agg(count(lit(1)).as("n_events"),
            min("ts_us").as("min_ts"), max("ts_us").as("max_ts"),
@@ -593,7 +593,7 @@ object Pipeline {
     val out = new java.io.File({ val r = Warehouse.fastScratchRoot; new java.io.File(r).mkdirs(); r },
       s"graft_zorder_${Warehouse.pathToken(sfDir)}_d${dimBits}x$bins").getPath
     writeZorderExport(spark, sfDir, out, dimBits, bins)
-    val stats = spark.read.parquet(out)
+    val stats = graft.sources.Tables.parquet(spark, out)
       .groupBy("bucket")
       .agg(min("ts_us").as("bmin_ts"), max("ts_us").as("bmax_ts"),
            min(col("user_id")).as("bmin_u"), max(col("user_id")).as("bmax_u"))
@@ -639,7 +639,7 @@ object Pipeline {
     val out = new java.io.File({ val r = Warehouse.fastScratchRoot; new java.io.File(r).mkdirs(); r },
       s"graft_sorted_${Warehouse.pathToken(sfDir)}_b${buckets}x$bins").getPath
     writeSortedExport(spark, sfDir, out, buckets, bins)
-    spark.read.parquet(out)
+    graft.sources.Tables.parquet(spark, out)
       .groupBy(col("bucket").cast("bigint").as("bucket"))
       .agg(count(lit(1)).as("n_events"),
            min("ts_us").as("min_ts"), max("ts_us").as("max_ts"))
@@ -807,7 +807,7 @@ object Pipeline {
     val out = new java.io.File({ val r = Warehouse.fastScratchRoot; new java.io.File(r).mkdirs(); r },
       s"graft_export_${Warehouse.pathToken(sfDir)}_s${nShards}q${(qualityMin * 100).round}").getPath
     writeExportShards(spark, sfDir, out, nShards, qualityMin)
-    spark.read.parquet(out)
+    graft.sources.Tables.parquet(spark, out)
       // the partition-directory column reads back as INT; the oracle's
       // doc_id % 16 is BIGINT
       .groupBy(col("shard").cast("bigint").as("shard"))

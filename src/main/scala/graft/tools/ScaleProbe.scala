@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Scale-slope probe: replicate the driver tables k× (ids offset per copy so
   * keys stay distinct and near-dup pairs don't explode combinatorially) into
@@ -107,7 +108,7 @@ object ScaleProbe {
     // original, and the pair output itself grows quadratically, drowning
     // the algorithmic slope this probe is after.)
     import spark.implicits._
-    val docs = spark.read.parquet(s"$srcDir/documents.parquet")
+    val docs = Tables.table(spark, srcDir, "documents")
     val maxDoc = docs.agg(max("doc_id")).collect()(0).getLong(0) + 1
     (0 until mult).map { i =>
       if (i == 0) docs
@@ -126,7 +127,7 @@ object ScaleProbe {
     }
       .reduce(_ unionByName _)
       .write.mode(SaveMode.Overwrite).parquet(s"$scaled/documents.parquet")
-    val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
+    val emb = Tables.table(spark, srcDir, "embeddings")
     val maxVec = emb.agg(max("vec_id")).collect()(0).getLong(0) + 1
     (0 until mult).map(i => emb.withColumn("vec_id", col("vec_id") + lit(i * maxVec)))
       .reduce(_ unionByName _)
@@ -135,7 +136,7 @@ object ScaleProbe {
     // with the original names would be exact name-duplicates of their
     // originals, making the fuzzy-match pair OUTPUT itself quadratic in k
     // and drowning the algorithmic slope.
-    val cust = spark.read.parquet(s"$srcDir/customer.parquet")
+    val cust = Tables.table(spark, srcDir, "customer")
     val maxCust = cust.agg(max("c_custkey")).collect()(0).getLong(0) + 1
     (0 until mult).map { i =>
       val shifted = cust.withColumn("c_custkey", col("c_custkey") + lit(i * maxCust))
@@ -151,7 +152,7 @@ object ScaleProbe {
     // relationship holds at k× (bloom_join, cohort_retention, the CDC
     // family). Dates/prices unchanged — the cohort/quarter structure and
     // the mod-class changelog derivation repeat per replica.
-    val ord = spark.read.parquet(s"$srcDir/orders.parquet")
+    val ord = Tables.table(spark, srcDir, "orders")
     val maxOrd = ord.agg(max("o_orderkey")).collect()(0).getLong(0) + 1
     (0 until mult).map(i => ord
         .withColumn("o_orderkey", col("o_orderkey") + lit(i * maxOrd))
@@ -162,7 +163,7 @@ object ScaleProbe {
     // events: ids and users offset per replica (distinct-count mass grows
     // k×, the sketch's workload); timestamps/types/values unchanged so the
     // distributional shape holds
-    val ev = spark.read.parquet(s"$srcDir/events.parquet")
+    val ev = Tables.table(spark, srcDir, "events")
     val maxEvent = ev.agg(max("event_id")).collect()(0).getLong(0) + 1
     val maxUser = ev.agg(max("user_id")).collect()(0).getLong(0) + 1
     (0 until mult).map(i => ev
@@ -172,7 +173,7 @@ object ScaleProbe {
       .write.mode(SaveMode.Overwrite).parquet(s"$scaled/events.parquet")
     // lineitem: order keys offset, measures unchanged — the quantile
     // sketch sees k× rows over the same price distribution
-    val li = spark.read.parquet(s"$srcDir/lineitem.parquet")
+    val li = Tables.table(spark, srcDir, "lineitem")
     val maxOrder = li.agg(max("l_orderkey")).collect()(0).getLong(0) + 1
     (0 until mult).map(i => li.withColumn("l_orderkey", col("l_orderkey") + lit(i * maxOrder)))
       .reduce(_ unionByName _)
@@ -180,7 +181,7 @@ object ScaleProbe {
     // small dims: copied 1× verbatim — corpus growth multiplies facts,
     // not the nation/region/supplier/part vocabulary
     Seq("nation", "region", "supplier", "part").foreach { t =>
-      spark.read.parquet(s"$srcDir/$t.parquet")
+      Tables.table(spark, srcDir, t)
         .write.mode(SaveMode.Overwrite).parquet(s"$scaled/$t.parquet")
     }
 

@@ -1,20 +1,17 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
-
 /** [[graft.operators.Lineage]] is the one place a plan's lineage is cut,
   * so `graft.iter.checkpoint` decides where every cut's blocks live. */
 class LineageSpec extends SparkSpecBase {
 
+  private def rddDirs(): Set[String] = spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+    val dir = new org.apache.hadoop.fs.Path(d)
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("rdd-"))
+  }.toSet
+
   test("reliable mode: dedup_minhash cuts to rdd-* dirs, none local") {
     val sc = spark.sparkContext
-    def rddDirs(): Set[String] = sc.getCheckpointDir.toSeq.flatMap { d =>
-      val dir = new org.apache.hadoop.fs.Path(d)
-      dir.getFileSystem(sc.hadoopConfiguration).listStatus(dir).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("rdd-"))
-    }.toSet
     val dirsBefore = rddDirs()
     val persistedBefore = sc.getPersistentRDDs.keySet
     spark.conf.set("graft.iter.checkpoint", "reliable")
@@ -29,22 +26,24 @@ class LineageSpec extends SparkSpecBase {
     assert(localCuts.isEmpty, s"executor-local cuts under reliable mode: ${localCuts.map(_.id)}")
   }
 
+  test("reliable mode: isolateQueryState deletes the rdd-* dirs; the dir goes at JVM exit") {
+    spark.conf.set("graft.iter.checkpoint", "reliable")
+    try SparkEntry.queries("dedup_minhash")(spark, sf0001).collect()
+    finally spark.conf.unset("graft.iter.checkpoint")
+    assert(rddDirs().nonEmpty, "reliable cuts write rdd-* dirs")
+    Bench.isolateQueryState(spark)
+    assert(rddDirs().isEmpty, s"rdd-* dirs left under ${spark.sparkContext.getCheckpointDir}")
+    // Lineage set the context dir (nothing else in this JVM sets one), so
+    // it is registered for deletion at exit; cancelling reports that
+    val dir = new org.apache.hadoop.fs.Path(spark.sparkContext.getCheckpointDir.get)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.cancelDeleteOnExit(dir), s"$dir is not deleted at JVM exit")
+    fs.deleteOnExit(dir)
+  }
+
   test("no direct checkpoint call in src/main outside Lineage") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"not found: ${root.toAbsolutePath}")
-    val helper = root.resolve("graft/operators/Lineage.scala")
-    val call = """localCheckpoint\(|\.checkpoint\(""".r
-    def code(line: String): String = {
-      val t = line.trim
-      if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
-    }
-    val hits = Files.walk(root).iterator().asScala.toSeq
-      .filter(p => p.toString.endsWith(".scala") && p != helper)
-      .flatMap { p: Path =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if call.findFirstIn(code(line)).nonEmpty => s"$p:${i + 1}"
-        }
-      }
+    val hits = MainSources.hits("""localCheckpoint\(|\.checkpoint\(""".r,
+      "graft/operators/Lineage.scala")
     assert(hits.isEmpty, s"${hits.size} direct calls; cut through graft.operators.Lineage:\n" +
       hits.mkString("\n"))
   }
