@@ -8,13 +8,14 @@ import scala.util.control.NonFatal
   * (the generated code per plan is identical across scale factors). */
 object Bench {
 
-  /** The one local-session recipe every measurement tool shares (Bench,
-    * Probe, ScaleProbe): identical configs are what make their
-    * numbers comparable — a flag added in one tool but not another would
-    * make cross-tool deltas measurement artifacts. */
-  def localSession(cpus: String): SparkSession = {
+  /** The one local-session recipe every main shares (Bench, Verify,
+    * Probe, ScaleProbe, Vacuum, FaultDemo): identical configs are what make
+    * their numbers and outputs comparable — a flag added in one tool but
+    * not another would make cross-tool deltas measurement artifacts.
+    * `master` defaults to `local[$cpus]`; FaultDemo passes a retrying one. */
+  def localSession(cpus: String, master: Option[String] = None): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(master.getOrElse(s"local[$cpus]"))
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
@@ -347,7 +348,8 @@ object Bench {
     // real regressions: both raw pass times, the min, the calib triple, and
     // the per-query memory peaks (the measured form of the 100 TB
     // state-bound claims). Path override: SPARK_GRAFT_BENCH_FULL; tag a
-    // sealed run `bench/full_r<N>.json` and commit it.
+    // sealed run `bench/full_r<N>_open.json` and commit it (the default
+    // path is gitignored).
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench/full_latest.json")
     // (commit stamp computed above, shared with the trailer — it is what
     // lets BenchDiff's paired host estimator attribute carried queries to

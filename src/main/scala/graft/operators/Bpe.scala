@@ -71,12 +71,15 @@ object Bpe {
         trim(col("seq")).as("seg"))
       .orderBy("word")
 
+  /** Largest vocabulary (distinct words) the driver merge loop takes. */
+  private val MaxDriverVocab = 2000000
+
   /** Runs the merge loop; returns (learned rules, final symbol state).
     *
     * Two strategies, picked by vocabulary size:
     *
-    *  - **Driver loop** (vocab ≤ `graft.bpe.maxDriverVocab`, default 2M
-    *    distinct words): ONE distributed job — the corpus word count, the
+    *  - **Driver loop** (vocab ≤ [[MaxDriverVocab]], 2M distinct
+    *    words): ONE distributed job — the corpus word count, the
     *    only step whose cost scales with corpus mass — then the whole merge
     *    loop runs driver-side over the (small) vocabulary with incremental
     *    pair-count maintenance: a pair→words inverted index plus a
@@ -98,15 +101,12 @@ object Bpe {
   private def trainLoop(wc: DataFrame, merges: Int): (DataFrame, DataFrame) = {
     val spark = wc.sparkSession
     import spark.implicits._
-    val maxDriver = math.min(
-      spark.conf.get("graft.bpe.maxDriverVocab", "2000000").toLong,
-      Int.MaxValue - 1L).toInt
     // ONE run of the corpus aggregate both decides the strategy and feeds
-    // the driver loop: take maxDriver+1 rows — if the vocabulary fits, we
+    // the driver loop: take MaxDriverVocab+1 rows — if the vocabulary fits, we
     // already hold all of it (a separate count() would re-run the corpus
     // scan, the only corpus-mass-scaled step, twice).
-    val head = wc.select(col("word"), col("wcnt")).as[(String, Long)].take(maxDriver + 1)
-    if (head.length <= maxDriver) trainLoopDriverFromRows(spark, head, merges)
+    val head = wc.select(col("word"), col("wcnt")).as[(String, Long)].take(MaxDriverVocab + 1)
+    if (head.length <= MaxDriverVocab) trainLoopDriverFromRows(spark, head, merges)
     else trainLoopDistributed(wc, merges)
   }
 

@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    storage level. The blocks live only on the executors that computed
   *    them, so an executor loss re-runs the query.
   *  - `reliable`: `checkpoint(eager = true)` into the context checkpoint
-  *    dir, set from `graft.iter.checkpointDir` when the context has none.
+  *    dir. When the context has none, it is set to `<root>/<pid>`, with
+  *    `<root>` from `graft.iter.checkpointDir`.
   *    A lost executor costs a task retry, not the job. Always eager: a
   *    lazy reliable checkpoint computes its RDD twice to write it. Spark's
   *    `cleanCheckpoints` is off by default, so the files stay until
@@ -40,11 +41,18 @@ object Lineage {
       case "reliable" =>
         val sc = spark.sparkContext
         if (sc.getCheckpointDir.isEmpty) {
-          sc.setCheckpointDir(spark.conf.get("graft.iter.checkpointDir",
+          // one <pid> dir per JVM under the root: a killed JVM never runs
+          // its exit hook, so the next one deletes the trees of dead pids
+          val root = new Path(spark.conf.get("graft.iter.checkpointDir",
             new java.io.File(sys.props("java.io.tmpdir"), "graft-checkpoints").getPath))
-          // Spark made a fresh <uuid> dir under that root for this context
-          val dir = new Path(sc.getCheckpointDir.get)
-          dir.getFileSystem(sc.hadoopConfiguration).deleteOnExit(dir)
+          val fs = root.getFileSystem(sc.hadoopConfiguration)
+          if (fs.exists(root)) fs.listStatus(root).map(_.getPath)
+            .filter(p => p.getName.matches("\\d{1,18}") &&
+              !ProcessHandle.of(p.getName.toLong).filter(_.isAlive).isPresent)
+            .foreach(fs.delete(_, true))
+          sc.setCheckpointDir(new Path(root, ProcessHandle.current.pid.toString).toString)
+          // Spark made a fresh <uuid> dir under that for this context
+          fs.deleteOnExit(new Path(sc.getCheckpointDir.get))
         }
         df.checkpoint(eager = true)
       case other => throw new IllegalArgumentException(

@@ -267,11 +267,10 @@ object EventStreams {
     * forked a `chmod` or `readlink` process per file (see
     * [[graft.sources.LocalFs]], which removed those processes). Streaming
     * queries therefore plan with their own partition count
-    * (`graft.stream.shufflePartitions`, default 8, never raising the
-    * session value; with 4 cores the session value 4 is the smaller, so
-    * every replay runs at 4) — at production rates you size this to
-    * sustained throughput, because it also fixes the state parallelism for
-    * the checkpoint's lifetime. */
+    * ([[StreamWidth]], 8, never raising the session value; with 4 cores
+    * the session value 4 is the smaller, so every replay runs at 4) — at
+    * production rates you size this to sustained throughput, because it
+    * also fixes the state parallelism for the checkpoint's lifetime. */
   private def runToCompletion(spark: SparkSession, streamed: DataFrame,
                               prefix: String, mode: OutputMode,
                               widthOverride: Option[Int] = None): DataFrame = {
@@ -300,12 +299,15 @@ object EventStreams {
     spark.table(name)
   }
 
+  /** Streaming-scoped shuffle width when no `widthOverride` is given. */
+  private val StreamWidth = 8
+
   /** The shuffle width streaming-scoped work plans at (see
-    * [[runToCompletion]]): `graft.stream.shufflePartitions` (default 8) or
-    * `widthOverride`, never above the session value. */
+    * [[runToCompletion]]): [[StreamWidth]] or `widthOverride`, never above
+    * the session value. */
   private def streamWidth(spark: SparkSession, widthOverride: Option[Int] = None): String =
-    math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt, widthOverride.getOrElse(
-      spark.conf.get("graft.stream.shufflePartitions", "8").toInt)).toString
+    math.min(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+      widthOverride.getOrElse(StreamWidth)).toString
 
   /** Runs `body` with session conf `key` set to `value`, then restores the
     * previous value, or unsets the key when it had none. */

@@ -142,7 +142,7 @@ object BenchDiff {
     }
     val tainted = rebuildTaintedOf(newRoot)
     val (rebuildExcluded, survivors0) = overThreshold.partition(r => tainted.contains(r.q))
-    // SURVEY §6.1.a declared-band exclusion: an already-adjudicated
+    // bench/adjudicated.md declared-band exclusion: an already-adjudicated
     // deliberate trade whose NEW time sits inside its declared band stops
     // surviving every cross-round diff and burying real signal (r12
     // VERDICT item 7 — compaction_plan's fixed two-level overhead).
@@ -239,7 +239,8 @@ object BenchDiff {
       case (Some(o), Some(n)) => unchangedBetween(o, n)
       case _ => None
     }
-    val d = diff(oldRoot, newRoot, threshold, Adjudicated.load(), unchanged)
+    val adjudicated = Adjudicated.load()
+    val d = diff(oldRoot, newRoot, threshold, adjudicated, unchanged)
     val oldT = timesOf(oldRoot); val newT = timesOf(newRoot)
     val oldTotal = d.common.map(oldT).sum
     val newTotal = d.common.map(newT).sum
@@ -257,8 +258,8 @@ object BenchDiff {
         f"raw=${r.raw}%5.2fx norm=${r.normCalib}%5.2fx — both passes rebuilt a gated artifact; re-measure warm")
     }
     d.bandExcluded.foreach { r =>
-      val (lo, hi) = Adjudicated.load()(r.q).bandSec.get
-      println(f"[benchdiff] ADJUDICATED (excluded, SURVEY §6.1.a): ${r.q}%-28s old=${r.oldSec}%7.3fs new=${r.newSec}%7.3fs " +
+      val (lo, hi) = adjudicated(r.q).bandSec.get
+      println(f"[benchdiff] ADJUDICATED (excluded, bench/adjudicated.md): ${r.q}%-28s old=${r.oldSec}%7.3fs new=${r.newSec}%7.3fs " +
         f"raw=${r.raw}%5.2fx norm=${r.normCalib}%5.2fx — inside declared band [$lo%4.2f, $hi%4.2f]s")
     }
     if (d.regressions.isEmpty)

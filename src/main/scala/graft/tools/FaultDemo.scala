@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.SparkSession
 
 import graft.functions.TextFunctions
 import graft.mr.MapReduce
@@ -38,14 +37,8 @@ object FaultDemo {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[4, 3]") // 3 attempts per task — the retry under test
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // 3 attempts per task — the retry under test
+    val spark = graft.Bench.localSession("4", Some("local[4, 3]"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -214,8 +214,8 @@ object ScaleProbe {
       (q, t1, tkCold, tkWarm)
     }
     // Persist the run as a machine-readable artifact so slope REGRESSIONS
-    // become named failures ([[SlopeCheck]]), not SURVEY footnotes. Tag a
-    // kept run `bench/slopes_baseline.json` / `bench/slopes_r<N>.json`.
+    // become named failures ([[SlopeCheck]]), not footnotes. Tag a sealed
+    // run `bench/slopes_r<N>_base.json`; the default path is gitignored.
     val slopesPath = sys.env.getOrElse("SPARK_GRAFT_SLOPES", "bench/slopes_latest.json")
     val calib1 = {
       val t0 = System.nanoTime()

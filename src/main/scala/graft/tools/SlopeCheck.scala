@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
   * ≤1 ≈ linear) and persists the run as `bench/slopes_*.json`; this tool
   * compares a new run against the committed baseline and FAILS (exit 1) on
   * any query whose warm slope grew past the threshold — so "dedup_clusters
-  * went quadratic" is a named red check, not a SURVEY footnote someone has
+  * went quadratic" is a named red check, not a footnote someone has
   * to notice.
   *
   * Usage: runMain graft.tools.SlopeCheck <baseline.json> <latest.json> [growthThreshold]
@@ -45,10 +45,11 @@ object SlopeCheck {
     if (missing.nonEmpty)
       println(s"[slopecheck] WARN baseline queries not in latest run: ${missing.mkString(",")}")
 
-    // SURVEY §6.1.a is the single declared-trade registry: an adjudicated
-    // query is judged against ITS OWN declared warm-slope ceiling instead
-    // of the generic growth rule (a ceiling, not an exemption — exceeding
-    // it still flags), so the prose table and this gate cannot drift.
+    // bench/adjudicated.md is the single declared-trade registry: an
+    // adjudicated query is judged against ITS OWN declared warm-slope
+    // ceiling instead of the generic growth rule (a ceiling, not an
+    // exemption — exceeding it still flags), so the table and this gate
+    // cannot drift.
     val adjudicated = Adjudicated.load()
     val flags = common.flatMap { q =>
       val growth = c(q) / b(q)
@@ -58,7 +59,7 @@ object SlopeCheck {
             Some((q, b(q), c(q), growth))
           else {
             if (growth > threshold && c(q) > 0.25)
-              println(f"[slopecheck] ADJUDICATED (SURVEY §6.1.a): $q%-28s warm=${c(q)}%6.3f <= declared ceiling $ceiling%4.2f")
+              println(f"[slopecheck] ADJUDICATED (bench/adjudicated.md): $q%-28s warm=${c(q)}%6.3f <= declared ceiling $ceiling%4.2f")
             None
           }
         case None =>

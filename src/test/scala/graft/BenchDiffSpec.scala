@@ -130,4 +130,9 @@ class BenchDiffSpec extends AnyFunSuite {
     assert(d.regressions.isEmpty)
     assert(d.bandExcluded.map(_.q) == Seq("q05"))
   }
+
+  test("no code in src/main reads SURVEY.md; the registry is bench/adjudicated.md") {
+    val hits = MainSources.hits("""SURVEY\.md""".r)
+    assert(hits.isEmpty, s"${hits.size} lines name SURVEY.md:\n" + hits.mkString("\n"))
+  }
 }

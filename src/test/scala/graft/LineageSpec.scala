@@ -41,6 +41,40 @@ class LineageSpec extends SparkSpecBase {
     fs.deleteOnExit(dir)
   }
 
+  test("reliable mode: setting the context dir deletes dead JVMs' trees, keeps live ones") {
+    import java.nio.file.{Files, Path}
+    import graft.operators.Lineage._
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("graft_ckpt_root")
+    def plant(pid: Long): Path = {
+      val part = root.resolve(s"$pid/0a1b-uuid/rdd-7/part-00000")
+      Files.createDirectories(part.getParent)
+      Files.write(part, Array[Byte](1, 2, 3))
+      root.resolve(pid.toString)
+    }
+    val finished = new ProcessBuilder("true").start()
+    finished.waitFor()
+    val dead = plant(finished.pid)
+    val live = plant(ProcessHandle.current.pid)
+    val saved = sc.getCheckpointDir
+    org.apache.spark.CheckpointDirAccess.set(sc, None)
+    spark.conf.set("graft.iter.checkpoint", "reliable")
+    spark.conf.set("graft.iter.checkpointDir", root.toString)
+    try {
+      spark.range(8).toDF("id").cutLineage().count()
+      assert(sc.getCheckpointDir.exists(_.contains(s"$live/")),
+        s"context dir ${sc.getCheckpointDir} is not under $live")
+    } finally {
+      spark.conf.unset("graft.iter.checkpoint")
+      spark.conf.unset("graft.iter.checkpointDir")
+      org.apache.spark.CheckpointDirAccess.set(sc, saved)
+    }
+    assert(!Files.exists(dead), s"tree of finished pid ${finished.pid} left at $dead")
+    assert(Files.exists(live.resolve("0a1b-uuid/rdd-7/part-00000")),
+      s"tree of the live JVM deleted at $live")
+    org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+  }
+
   test("no direct checkpoint call in src/main outside Lineage") {
     val hits = MainSources.hits("""localCheckpoint\(|\.checkpoint\(""".r,
       "graft/operators/Lineage.scala")

@@ -9,8 +9,9 @@ import scala.util.matching.Regex
   * `src/main/scala` may make it. */
 object MainSources {
   /** `file:line` of every line outside `owner` (a path under
-    * `src/main/scala`) whose code, comments stripped, matches `pattern`. */
-  def hits(pattern: Regex, owner: String): Seq[String] = {
+    * `src/main/scala`, none by default) whose code, comments stripped,
+    * matches `pattern`. */
+  def hits(pattern: Regex, owner: String = ""): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"not found: ${root.toAbsolutePath}")
     val exempt = root.resolve(owner)
