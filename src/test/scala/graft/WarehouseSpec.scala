@@ -465,7 +465,8 @@ class WarehouseSpec extends SparkSpecBase {
     assert(live != null && live.nonEmpty)
   }
 
-  test("adjudicated registry: bench/adjudicated.md parses; known trades carry sane bounds") {
+  test("adjudicated registry: SURVEY §6.1.a parses; known trades carry sane bounds") {
+    // SURVEY §6.1.a names the registry; its table lives in bench/adjudicated.md
     val adj = graft.tools.Adjudicated.load("bench/adjudicated.md")
     // the rows both gates depend on — a silently-shrunk registry would
     // turn adjudicated trades back into red flags
