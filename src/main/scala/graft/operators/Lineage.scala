@@ -13,8 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    storage level. The blocks live only on the executors that computed
   *    them, so an executor loss re-runs the query.
   *  - `reliable`: `checkpoint(eager = true)` into the context checkpoint
-  *    dir. When the context has none, it is set to `<root>/<pid>`, with
-  *    `<root>` from `graft.iter.checkpointDir`.
+  *    dir. When the context has none, it is set to `<root>/<host>-<pid>`,
+  *    with `<root>` from `graft.iter.checkpointDir`.
   *    A lost executor costs a task retry, not the job. Always eager: a
   *    lazy reliable checkpoint computes its RDD twice to write it. Spark's
   *    `cleanCheckpoints` is off by default, so the files stay until
@@ -41,16 +41,20 @@ object Lineage {
       case "reliable" =>
         val sc = spark.sparkContext
         if (sc.getCheckpointDir.isEmpty) {
-          // one <pid> dir per JVM under the root: a killed JVM never runs
-          // its exit hook, so the next one deletes the trees of dead pids
+          // one <host>-<pid> dir per JVM under the root: a killed JVM never
+          // runs its exit hook, so the next one on the same host deletes the
+          // trees of its dead pids. The root may be shared by other hosts,
+          // whose pids this host cannot judge, so their dirs stay.
           val root = new Path(spark.conf.get("graft.iter.checkpointDir",
             new java.io.File(sys.props("java.io.tmpdir"), "graft-checkpoints").getPath))
           val fs = root.getFileSystem(sc.hadoopConfiguration)
-          if (fs.exists(root)) fs.listStatus(root).map(_.getPath)
-            .filter(p => p.getName.matches("\\d{1,18}") &&
-              !ProcessHandle.of(p.getName.toLong).filter(_.isAlive).isPresent)
-            .foreach(fs.delete(_, true))
-          sc.setCheckpointDir(new Path(root, ProcessHandle.current.pid.toString).toString)
+          val host = java.net.InetAddress.getLocalHost.getHostName
+          val ours = (java.util.regex.Pattern.quote(host) + "-(\\d{1,18})").r
+          if (fs.exists(root)) fs.listStatus(root).map(_.getPath).filter(_.getName match {
+              case ours(pid) => !ProcessHandle.of(pid.toLong).filter(_.isAlive).isPresent
+              case _ => false
+            }).foreach(fs.delete(_, true))
+          sc.setCheckpointDir(new Path(root, s"$host-${ProcessHandle.current.pid}").toString)
           // Spark made a fresh <uuid> dir under that for this context
           fs.deleteOnExit(new Path(sc.getCheckpointDir.get))
         }

@@ -41,28 +41,32 @@ class LineageSpec extends SparkSpecBase {
     fs.deleteOnExit(dir)
   }
 
-  test("reliable mode: setting the context dir deletes dead JVMs' trees, keeps live ones") {
+  test("reliable mode: setting the context dir deletes this host's dead JVMs' trees, keeps the rest") {
     import java.nio.file.{Files, Path}
     import graft.operators.Lineage._
     val sc = spark.sparkContext
     val root = Files.createTempDirectory("graft_ckpt_root")
-    def plant(pid: Long): Path = {
-      val part = root.resolve(s"$pid/0a1b-uuid/rdd-7/part-00000")
+    def plant(name: String): Path = {
+      val part = root.resolve(s"$name/0a1b-uuid/rdd-7/part-00000")
       Files.createDirectories(part.getParent)
       Files.write(part, Array[Byte](1, 2, 3))
-      root.resolve(pid.toString)
+      root.resolve(name)
     }
+    val host = java.net.InetAddress.getLocalHost.getHostName
     val finished = new ProcessBuilder("true").start()
     finished.waitFor()
-    val dead = plant(finished.pid)
-    val live = plant(ProcessHandle.current.pid)
+    val dead = plant(s"$host-${finished.pid}")
+    val live = plant(s"$host-${ProcessHandle.current.pid}")
+    // another host's pid means nothing here, dead or not on this host
+    val otherHost = plant(s"other-$host-${finished.pid}")
+    val bare = plant(finished.pid.toString)
     val saved = sc.getCheckpointDir
     org.apache.spark.CheckpointDirAccess.set(sc, None)
     spark.conf.set("graft.iter.checkpoint", "reliable")
     spark.conf.set("graft.iter.checkpointDir", root.toString)
     try {
       spark.range(8).toDF("id").cutLineage().count()
-      assert(sc.getCheckpointDir.exists(_.contains(s"$live/")),
+      assert(sc.getCheckpointDir.exists(_.contains(s"${live.getFileName}/")),
         s"context dir ${sc.getCheckpointDir} is not under $live")
     } finally {
       spark.conf.unset("graft.iter.checkpoint")
@@ -70,8 +74,9 @@ class LineageSpec extends SparkSpecBase {
       org.apache.spark.CheckpointDirAccess.set(sc, saved)
     }
     assert(!Files.exists(dead), s"tree of finished pid ${finished.pid} left at $dead")
-    assert(Files.exists(live.resolve("0a1b-uuid/rdd-7/part-00000")),
-      s"tree of the live JVM deleted at $live")
+    Seq(live, otherHost, bare).foreach { d =>
+      assert(Files.exists(d.resolve("0a1b-uuid/rdd-7/part-00000")), s"tree deleted at $d")
+    }
     org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
   }
 

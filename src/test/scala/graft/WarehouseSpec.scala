@@ -466,8 +466,7 @@ class WarehouseSpec extends SparkSpecBase {
   }
 
   test("adjudicated registry: SURVEY §6.1.a parses; known trades carry sane bounds") {
-    // SURVEY §6.1.a names the registry; its table lives in bench/adjudicated.md
-    val adj = graft.tools.Adjudicated.load("bench/adjudicated.md")
+    val adj = graft.tools.Adjudicated.load()
     // the rows both gates depend on — a silently-shrunk registry would
     // turn adjudicated trades back into red flags
     Seq("dedup_ngram", "decontaminate", "interval_join",
